@@ -84,22 +84,27 @@ object QueriesMwu {
   private val effectRrb =
     "(1e0 - (2e0 * u1) / (cast(n1 as double) * cast(n2 as double)))"
 
-  /** Rank→U→z chain for the derived-stats gates. r15: the rank sums come
-    * from [[MwuAgg.rankSumsAgg]] — cells collapse to distinct-value
-    * counts through a map-side-combined aggregate BEFORE the per-feature
-    * sort, so the window sorts d distinct values instead of n cells
-    * (guide §2.3 "aggregate before you shuffle"; the per-feature window
-    * parallelism is |features|, so shrinking its input is the lever).
-    * Bit-equal to the per-row spelling by the exact-dyadic rank
-    * identities — `mwu_ranksum_agg` shares `mwu_ranksum`'s oracle as
-    * the standing proof, and every consumer gate below re-proves it
-    * hash-exactly. The per-row spelling stays the declared surface of
-    * `mwu_rank`/`mwu_ranksum`/`mwu_u`/`mwu_effect`. */
-  private def statsDf(s: SparkSession, dir: String): DataFrame = {
-    val cells = liCells(s, dir)
-    MwuStats.withZ(MwuStats.withU(MwuAgg.rankSumsAgg(cells)),
+  /** The one rank→U→z chain of every z/p/BH gate. The rank sums come
+    * from [[MwuAgg.rankSumsAgg]] (cells collapse to distinct-value counts
+    * before the kernel's sort) unless the caller passes its own — the
+    * checkpointed marker table re-reads persisted per-cell ranks.
+    * Bit-equal to the per-cell spelling by the exact-dyadic rank
+    * identities: `mwu_ranksum_agg` shares `mwu_ranksum`'s oracle, and
+    * every gate below re-proves it hash-exactly. The per-cell spelling
+    * stays the declared surface of `mwu_rank`/`mwu_ranksum`/`mwu_u`/
+    * `mwu_effect`. */
+  private def statsDf(cells: DataFrame, rankSums: Option[DataFrame] = None): DataFrame =
+    MwuStats.withZ(MwuStats.withU(rankSums.getOrElse(MwuAgg.rankSumsAgg(cells))),
       MwuAgg.tieTerm(cells))
-  }
+
+  /** [[statsDf]] → p → the NaN-safe quantized `p9` (exp differs by ulps
+    * across libms). */
+  private def p9Chain(cells: DataFrame, rankSums: Option[DataFrame] = None): DataFrame =
+    MwuStats.withP(statsDf(cells, rankSums)).withColumn("p9", expr(q9n("p")))
+
+  /** [[p9Chain]] → Benjamini–Hochberg `p_adj` over the quantized p. */
+  private def pAdjChain(cells: DataFrame, rankSums: Option[DataFrame] = None): DataFrame =
+    MwuStats.withBH(p9Chain(cells, rankSums), "p9", "p_adj")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.7 distinct+sort of group labels (reference np.unique, rank_data.py:77)
@@ -129,17 +134,17 @@ object QueriesMwu {
     "mwu_rank_bucket" -> ((s, dir) => {
       // bucketSplit = false: this gate's declared property IS the
       // zero-exchange plan over the bucket layout (PlanSpec pins it);
-      // the r16 split spelling would add the (feature, vb) exchanges
-      // the layout exists to avoid
+      // the default split spelling would add the (feature, bucket)
+      // exchanges the layout exists to avoid
       Ranking.withRanks(bucketedCells(s, dir), bucketSplit = false)
         .groupBy("feature_id", "value")
         .agg(max("tie_count").as("tie_count"), max("rank").as("rank"))
     }),
     // the TIED-DATA scale path over the same bucketed layout (verdict
     // r12 #8): cells collapse to distinct-value counts map-side before
-    // the window, so the per-feature sort sees d distinct values
-    // instead of n cells — on heavy-tie corpora (replicated 10×: d
-    // fixed, n 10×) the slope flattens. Measured (r13, warm rows):
+    // the rank kernel, so its sort sees d distinct values instead of
+    // n cells — on heavy-tie corpora (replicated 10×: d fixed, n 10×)
+    // the slope flattens. Measured (r13, warm rows):
     // sf0.1 1.1 s vs 1.4-3.0 s per-row; 10× replicas 2.6 s (2.36×)
     // vs 12.9 s (4.35×) — the probe the r12 verdict asked for, adopted
     // as the scale path (the per-row spelling stays: per-cell ranks
@@ -174,25 +179,19 @@ object QueriesMwu {
         .select("feature_id", "grp", "n1", "n2", "cles", "r_rb")),
     // M2 tie-corrected z (+ sigma)
     "mwu_z" -> ((s, dir) =>
-      statsDf(s, dir).select("feature_id", "grp", "n1", "n", "tie_term", "u1", "sigma", "z")),
+      statsDf(liCells(s, dir))
+        .select("feature_id", "grp", "n1", "n", "tie_term", "u1", "sigma", "z")),
     // M3 two-sided p (q9-quantized; exp differs by ulps across libms)
     "mwu_p" -> ((s, dir) =>
-      MwuStats.withP(statsDf(s, dir))
-        .withColumn("p9", expr(q9n("p")))
-        .select("feature_id", "grp", "u1", "p9")),
+      p9Chain(liCells(s, dir)).select("feature_id", "grp", "u1", "p9")),
     // A5 Benjamini–Hochberg over the quantized p
-    "mwu_bh" -> ((s, dir) => {
-      val p = MwuStats.withP(statsDf(s, dir)).withColumn("p9", expr(q9n("p")))
-      MwuStats.withBH(p, pCol = "p9", outCol = "p_adj")
-        .select("feature_id", "grp", "p9", "p_adj")
-    }),
+    "mwu_bh" -> ((s, dir) =>
+      pAdjChain(liCells(s, dir)).select("feature_id", "grp", "p9", "p_adj")),
     // Holm step-DOWN (FWER) next to BH's step-up (FDR): prefix-max of
     // (m−i+1)·p over the same validity-partitioned order
-    "mwu_holm" -> ((s, dir) => {
-      val p = MwuStats.withP(statsDf(s, dir)).withColumn("p9", expr(q9n("p")))
-      MwuStats.withHolm(p, pCol = "p9", outCol = "p_holm")
-        .select("feature_id", "grp", "p9", "p_holm")
-    }),
+    "mwu_holm" -> ((s, dir) =>
+      MwuStats.withHolm(p9Chain(liCells(s, dir)), pCol = "p9", outCol = "p_holm")
+        .select("feature_id", "grp", "p9", "p_holm")),
     // A4+M4 group means and log2 fold change over fixed-point log1p values
     "mwu_lfc" -> ((s, dir) => {
       val cq = liCells(s, dir).withColumn("value", expr(logQuant))
@@ -212,31 +211,12 @@ object QueriesMwu {
     // single-feature pipeline on customer (c_acctbal can be negative — no lfc leg)
     "mwu_customer" -> ((s, dir) => {
       val cells = Tables.melt(Tables.read(s, dir, "customer"), "c_mktsegment", Seq("c_acctbal"))
-      // r16: c_acctbal is CONTINUOUS (~n distinct values), the documented
-      // degenerate case of [[MwuAgg.rankSumsAgg]] ("for continuous values
-      // it degrades to ~n aggregated rows — prefer Ranking.withRanks +
-      // rankSums there"): the r15 agg spelling measured +0.3 s here while
-      // every tied-feature gate gained. Static per-column choice; both
-      // spellings are bit-equal by the exact-dyadic rank identities (the
-      // shared oracle is the standing proof).
-      val st = MwuStats.withZ(MwuStats.withU(
-        MwuAgg.rankSums(Ranking.withRanks(cells))),
-        MwuAgg.tieTerm(cells))
-      MwuStats.withBH(MwuStats.withP(st).withColumn("p9", expr(q9n("p"))), "p9", "p_adj")
-        .select("feature_id", "grp", "n1", "u1", "z", "p9", "p_adj")
+      pAdjChain(cells).select("feature_id", "grp", "n1", "u1", "z", "p9", "p_adj")
     }),
     // MWU of events.value grouped by event_type
     "mwu_events" -> ((s, dir) => {
       val cells = Tables.melt(Tables.read(s, dir, "events"), "event_type", Seq("value"))
-      // r16: single continuous feature over a SMALL fact (events) — the
-      // aggregated spelling's distinct-value collapse buys nothing and
-      // its bucket-offset branch is fixed overhead (final-bench +0.66 s);
-      // per-row ranks, like mwu_customer (bit-equal, shared-oracle proof)
-      val st = MwuStats.withZ(MwuStats.withU(
-        MwuAgg.rankSums(Ranking.withRanks(cells))),
-        MwuAgg.tieTerm(cells))
-      MwuStats.withP(st).withColumn("p9", expr(q9n("p")))
-        .select("feature_id", "grp", "n1", "u1", "z", "p9")
+      p9Chain(cells).select("feature_id", "grp", "n1", "u1", "z", "p9")
     }),
     // J1 obs-table variant: group labels live in a SEPARATE obs table
     // (orders.o_orderstatus) joined onto the fact before the rank
@@ -255,10 +235,7 @@ object QueriesMwu {
         .select(col("o_orderstatus").as("grp"),
           lit("l_extendedprice").as("feature_id"),
           col("l_extendedprice").cast("double").as("value"))
-      val st = MwuStats.withZ(MwuStats.withU(MwuAgg.rankSumsAgg(cells)),
-        MwuAgg.tieTerm(cells))
-      MwuStats.withP(st).withColumn("p9", expr(q9n("p")))
-        .select("feature_id", "grp", "n1", "u1", "z", "p9")
+      p9Chain(cells).select("feature_id", "grp", "n1", "u1", "z", "p9")
     }),
     // LFC of part.p_retailprice by brand (prices > 0)
     "lfc_part" -> ((s, dir) => {
@@ -306,16 +283,7 @@ object QueriesMwu {
       val cells = Tables.read(s, dir, "nation").filter(col("n_nationkey") === 0)
         .select(col("n_name").as("grp"), lit("n_regionkey").as("feature_id"),
           col("n_regionkey").cast("double").as("value"))
-      // r16: the cells relation is ONE ROW — the aggregated rank-sum
-      // machinery (distinct-value collapse + bucket offsets) is pure
-      // fixed overhead here (measured +0.6 s); the per-row chain is the
-      // right spelling for degenerate inputs, bit-equal by the shared
-      // rank identities (this gate's oracle is the proof)
-      val st = MwuStats.withZ(MwuStats.withU(
-        MwuAgg.rankSums(Ranking.withRanks(cells, bucketSplit = false))),
-        MwuAgg.tieTerm(cells))
-      MwuStats.withBH(MwuStats.withP(st).withColumn("p9", expr(q9n("p"))), "p9", "p_adj")
-        .select("feature_id", "grp", "n1", "n2", "sigma", "z", "p9", "p_adj")
+      pAdjChain(cells).select("feature_id", "grp", "n1", "n2", "sigma", "z", "p9", "p_adj")
     }),
     // S6 round-trip: the per-group CSV sink (one directory per sanitized
     // group label, rank_gene_groups.py:294-307) written and read BACK, so
@@ -332,30 +300,14 @@ object QueriesMwu {
     })
   )
 
-  /** Full rank → U/z → p → BH chain with the NaN-safe quantized p.
-    * r15: rank sums via the aggregated spelling (see [[statsDf]]). */
-  private def pAdjChain(cells: DataFrame): DataFrame = {
-    val st = MwuStats.withZ(MwuStats.withU(MwuAgg.rankSumsAgg(cells)),
-      MwuAgg.tieTerm(cells))
-    MwuStats.withBH(MwuStats.withP(st).withColumn("p9", expr(q9n("p"))), "p9", "p_adj")
-  }
-
   /** Full pipeline → deterministic marker table (used by three entries). */
   private def markersDf(s: SparkSession, dir: String,
                         checkpoint: Option[String] = None): DataFrame = {
     val cells = liCells(s, dir)
-    // r15: without a checkpoint the rank sums take the aggregated
-    // spelling (see statsDf). WITH a checkpoint the per-cell rank
-    // relation IS the persisted S5 artifact, so that path keeps the
-    // per-row rank stage and re-reads it.
-    val rankSums = checkpoint match {
-      case None => MwuAgg.rankSumsAgg(cells)
-      case Some(_) => MwuAgg.rankSums(
-        Pipeline.rankedCells(s, cells, Pipeline.Config(checkpointDir = checkpoint)))
-    }
-    val st = MwuStats.withZ(MwuStats.withU(rankSums), MwuAgg.tieTerm(cells))
-    val bh = MwuStats.withBH(
-      MwuStats.withP(st).withColumn("p9", expr(q9n("p"))), "p9", "p_adj")
+    // WITH a checkpoint the per-cell rank relation IS the persisted S5
+    // artifact, so that path sums the re-read per-cell ranks
+    val bh = pAdjChain(cells, checkpoint.map(_ => MwuAgg.rankSums(
+      Pipeline.rankedCells(s, cells, Pipeline.Config(checkpointDir = checkpoint)))))
     val cq = cells.withColumn("value", expr(logQuant))
     val lfc = LogFold.groupMeans(cq)
       .withColumn("lfc9", expr(q9(lfcNatSql("mu1", "mu2"))))

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** A deterministic bucket id MONOTONE in double ordering — the
-  * partition-splitting key of the distributed prefix-sum rank spelling
-  * ([[graft.operators.MwuAgg.rankSumsAgg]]). Uses the classic IEEE-754
+  * partition-splitting key of the distributed prefix-sum rank kernel
+  * (`graft.operators.Ranking.prefixRank`). Uses the classic IEEE-754
   * total-order key (negatives: flip all bits; positives: identity after
   * recentering), truncated to its top 20 bits (`>> 44`), so:
   *

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
 object LogFold {
 
   /** Per (feature, grp): mu1 (group mean), mu2 (rest mean). */
-  def groupMeans(cells: DataFrame, valueCol: String = "value"): DataFrame = {
+  def groupMeans(cells: DataFrame): DataFrame = {
     val agg = cells.groupBy("feature_id", "grp")
-      .agg(sum(valueCol).as("s1"), count(lit(1)).as("c1"))
+      .agg(sum("value").as("s1"), count(lit(1)).as("c1"))
     val wFeat = Window.partitionBy("feature_id")
     agg
       .withColumn("tot", sum("s1").over(wFeat))

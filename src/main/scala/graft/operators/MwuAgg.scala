@@ -26,87 +26,51 @@ object MwuAgg {
   }
 
   /** A1+A3 WITHOUT sorting the fact table — the tied-data scale path.
-    * Average ranks are a pure function of distinct (feature, value)
-    * cumulative counts, so the fact rows collapse through a map-side-
-    * combined aggregate to (feature, value, grp, count) FIRST and only
-    * the distinct-value relation is sorted:
-    *   avg_rank(v) = C_{<v} + (t_v + 1)/2, computed by RANGE-frame sums
-    *   over the aggregated rows (peers share a value by construction);
+    * The fact rows collapse through a map-side-combined aggregate to
+    * (feature, value, grp, count) first, and [[Ranking.prefixRank]]
+    * ranks only those rows, weighted by their counts:
     *   rank_sum(grp) = Σ_v c(grp,v)·avg_rank(v), exact dyadic arithmetic
     *   → bit-identical to summing per-cell ranks in any order, so it
-    *   shares [[rankSums]]'s oracle.
-    * For discrete measures (quantities, discounts, grades) the window
+    *   shares [[rankSums]]'s oracle (PropertySpec pins the two equal,
+    *   NaN poisoning and NULL features included).
+    * For discrete measures (quantities, discounts, grades) the kernel
     * sorts thousands of rows instead of billions; for continuous values
-    * it degrades to ~n aggregated rows — prefer [[Ranking.withRanks]] +
-    * [[rankSums]] there (the per-cell ranks are also the API surface).
-    * NaN poisoning matches rank_data.py:193-196: any bad value NULLs the
-    * feature's rank sums while n1/n stay populated. */
-  def rankSumsAgg(cells: DataFrame): DataFrame = {
-    // r16: the r15 spelling windowed the distinct-value rows partitioned
-    // by feature_id alone — parallelism |features| (4), so ONE task
-    // sorted every distinct value of a continuous feature (~600 k
-    // l_extendedprice values = a 1.9 s single-task stage inside every
-    // derived-stats consumer; JobProf mwu_bh). The cumulative count a
-    // rank needs is a PREFIX SUM, which distributes two-level (the
-    // classic scan): split each feature's value axis by a DETERMINISTIC
-    // bucket id monotone in the value ([[graft.functions.DoubleSortBucket]]
-    // — a pure function, so no range sampling, no partition identity, no
-    // materialization), cumulate locally per (feature, bucket), and add
-    // each bucket's offset (total count of all lower buckets —
-    // feature×bucket-sized, broadcast). Bit-exact by construction: equal
-    // values share a bucket, so local t and off + lcum reproduce the
-    // global range-frame integers exactly, and every avg_rank·c term is
-    // a dyadic rational < 2^53 — sums never round, any order (the r15
-    // argument, unchanged). A single-valued column degrades to one
-    // bucket = exactly the old plan, never below it. Pinned bit-equal to
-    // the per-cell spelling (incl. NaN poisoning) by PropertySpec.
-    graft.functions.GraftFunctions.register(cells.sparkSession)
-    val cv = cells
-      .groupBy("feature_id", "value", "grp").agg(count(lit(1)).as("c"))
-      .withColumn("vb", expr("double_sort_bucket(value)"))
-    val wOrd = Window.partitionBy("feature_id", "vb").orderBy("value")
-    val wCum = wOrd.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPeer = wOrd.rangeBetween(Window.currentRow, Window.currentRow)
-    val wFeat = Window.partitionBy("feature_id")
-    // bucket offsets and the NaN flag ride one feature×bucket aggregate
-    // (null bucket = null values sorts FIRST, like the value order)
-    val wOff = Window.partitionBy("feature_id").orderBy("vb")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bt = cv.groupBy("feature_id", "vb").agg(sum("c").as("bc"),
-        max(Ranking.isBad(col("value"))).as("p_nan"))
-      .withColumn("off", coalesce(sum("bc").over(wOff), lit(0L)))
-      .withColumn("f_nan", max(col("p_nan")).over(wFeat))
-      .select("feature_id", "vb", "off", "f_nan")
-    // NULL-SAFE on vb: a null value buckets to null, and its cells must
-    // keep flowing (n1/n stay populated while only the ranks null out)
-    val btA = bt.withColumnRenamed("feature_id", "bt_f")
-      .withColumnRenamed("vb", "bt_vb")
-    cv
-      .withColumn("lcum", sum("c").over(wCum))
-      .withColumn("t", sum("c").over(wPeer))
-      .join(broadcast(btA),
-        col("feature_id") === col("bt_f") && col("vb") <=> col("bt_vb"))
-      .drop("bt_f", "bt_vb")
-      .withColumn("cum", col("off") + col("lcum"))
-      .withColumn("avg_rank", when(col("f_nan"), lit(null).cast("double"))
-        .otherwise((col("cum") - col("t")).cast("double") + (col("t") + 1L) / 2.0))
+    * it degrades to ~n aggregated rows, and the per-cell route
+    * ([[Ranking.withRanks]] + [[rankSums]]) measures faster there (README
+    * "Scale design"). NaN poisoning matches
+    * rank_data.py:193-196: any bad value NULLs the feature's rank sums
+    * while n1/n stay populated. */
+  def rankSumsAgg(cells: DataFrame): DataFrame =
+    Ranking.prefixRank(
+      cells.groupBy("feature_id", "value", "grp").agg(count(lit(1)).as("c")),
+      col("c"), split = true)
       .groupBy("feature_id", "grp")
-      .agg(sum(col("avg_rank") * col("c")).as("rank_sum"), sum("c").as("n1"))
-      .withColumn("n", sum("n1").over(wFeat))
-  }
+      .agg(sum(col("rank") * col("c")).as("rank_sum"), sum("c").as("n1"))
+      .withColumn("n", sum("n1").over(Window.partitionBy("feature_id")))
 
   /** A2: tie term Σ(t³−t) per feature. Two-level aggregate: count each
     * distinct value's multiplicity, then sum t³−t — singletons contribute
     * 0, exactly the scipy tie-vector semantics (rank_data.py:315).
     * NaN rows are excluded: NaN≠NaN under IEEE, so in the reference each
     * NaN is a singleton tie group contributing 0; Spark's groupBy would
-    * wrongly coalesce NaNs into one group (SURVEY.md §7.5). Exact BIGINT
-    * arithmetic throughout. */
-  def tieTerm(cells: DataFrame, valueCol: String = "value"): DataFrame =
-    cells.filter(!Ranking.isBad(col(valueCol)))
-      .groupBy("feature_id", valueCol).agg(count(lit(1)).as("t"))
-      .groupBy("feature_id")
-      .agg(sum(col("t") * col("t") * col("t") - col("t")).as("tie_term"))
+    * wrongly coalesce NaNs into one group (SURVEY.md §7.5).
+    *
+    * Exact BIGINT arithmetic, checked whatever the session's ANSI mode:
+    * each term is spelled (t−1)·t·(t+1), which stays inside BIGINT up to
+    * t = 2^21 where t·t·t alone would not, and a larger t or a
+    * per-feature sum past BIGINT raises `MWU_TIE_TERM_OVERFLOW` instead
+    * of wrapping into a silently wrong sigma. */
+  def tieTerm(cells: DataFrame): DataFrame = {
+    val overflow = raise_error(concat_ws(" ",
+      lit("MWU_TIE_TERM_OVERFLOW: tie term exceeds BIGINT for feature"),
+      col("feature_id").cast("string")))
+    val t = col("t")
+    // (t−1)·t·(t+1) < 2^63 exactly when t <= 2^21; try_sum is NULL past BIGINT
+    val term = when(t > (1L << 21), overflow).otherwise((t - 1L) * t * (t + 1L))
+    cells.filter(!Ranking.isBad(col("value")))
+      .groupBy("feature_id", "value").agg(count(lit(1)).as("t"))
+      .groupBy("feature_id").agg(coalesce(try_sum(term), overflow).as("tie_term"))
+  }
 
   /** Oracle-SQL for [[rankSums]] over a ranked-cells subquery. */
   def rankSumsSql(rankedSql: String): String =
@@ -120,7 +84,7 @@ object MwuAgg {
     * one group (t³−t ≠ 0) where the reference treats each NaN as a
     * contributing-zero singleton. */
   def tieTermSql(cellsSql: String): String =
-    s"""select feature_id, cast(sum(t*t*t - t) as bigint) as tie_term from (
+    s"""select feature_id, cast(sum((t - 1) * t * (t + 1)) as bigint) as tie_term from (
        | select feature_id, value, cast(count(*) as bigint) as t
        | from ($cellsSql) where value is not null and not isnan(value)
        | group by feature_id, value

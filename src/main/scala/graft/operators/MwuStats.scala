@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * evaluates the *identical* text.
   *
   * Input frames are feature×group sized (tiny relative to the fact table);
-  * the tie-term join broadcasts when small, else it's a shuffle join on
-  * `feature_id` — either way nothing is ever collected (the reference
-  * `.compute()`s eagerly to driver numpy, pvals.py:111,137).
+  * the feature-sized tie-term frame is always broadcast into the join —
+  * nothing is ever collected (the reference `.compute()`s eagerly to
+  * driver numpy, pvals.py:111,137).
   */
 object MwuStats {
 
@@ -39,13 +39,12 @@ object MwuStats {
     * sqrt is correctly rounded ⇒ z is bit-exact across engines given the
     * exact integer/dyadic inputs. sigma=0 (all values tied) yields ±inf/NaN
     * exactly like the reference's errstate-ignored division (pvals.py:57-58). */
-  def withZ(uStats: DataFrame, tieTerm: DataFrame, broadcastTies: Boolean = true): DataFrame = {
-    val tt = if (broadcastTies) broadcast(tieTerm) else tieTerm
+  def withZ(uStats: DataFrame, tieTerm: DataFrame): DataFrame = {
     // Explicit zero-denominator branches: the reference relies on numpy's
     // errstate-ignored IEEE semantics (pvals.py:57-58); Spark 4 defaults
     // to ANSI mode which would throw instead, so the IEEE outcomes
     // (sigma=0 → z=±inf, 0/0 → NaN, n<2 → NaN sigma) are spelled out.
-    uStats.join(tt, Seq("feature_id"), "left")
+    uStats.join(broadcast(tieTerm), Seq("feature_id"), "left")
       .withColumn("tie_term", coalesce(col("tie_term"), lit(0L)))
       .withColumn("mu_u", col("n1") * col("n2") / 2.0)
       .withColumn("sigma", when(col("n") > 1, sqrt(

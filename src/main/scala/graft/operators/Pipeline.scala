@@ -6,11 +6,19 @@ import org.apache.spark.sql.functions._
 /** End-to-end marker-stats pipeline — the Spark rendering of
   * `rank_gene_groups_vec` (/root/reference/scratch/rank_gene_groups.py:261-309).
   *
-  * Plan shape (SURVEY.md §3.1 "Spark trace"): exactly two heavy shuffles —
-  * hash by `feature_id` for the rank windows, hash by (feature_id, grp) for
-  * the aggregates; tie-term and lfc-mean frames are feature×group sized and
-  * joined broadcast/AQE. Nothing is collected to the driver (the reference
-  * crosses a `.compute()` barrier per stage).
+  * Plan shape (SURVEY.md §3.1 "Spark trace"): ONE exchange moves cells
+  * unaggregated — hash by (feature_id, value bucket) into the rank
+  * kernel's local windows ([[Ranking.prefixRank]]). Every other exchange
+  * carries a map-side-combined aggregate or a window over one: the
+  * bucket offsets (2), the rank sums (2), the tie term (2), the lfc
+  * means (2), BH (1) and top-k (1). PlanSpec pins the total, 11 hash
+  * exchanges over lineitem at sf0.001. Tie-term and lfc-mean frames are
+  * feature×group sized and joined broadcast. Nothing is collected to the
+  * driver (the reference crosses a `.compute()` barrier per stage).
+  *
+  * Ranks are per cell here. That route wins on continuous values; the
+  * aggregated rank sums ([[MwuAgg.rankSumsAgg]]) win on tied ones
+  * (README "Scale design" has the measurements).
   *
   * Checkpoint (S5/S7, rank_gene_groups.py:219-252): the rank stage is the
   * cost center ("HIGHLY recommended to save this data to disk",

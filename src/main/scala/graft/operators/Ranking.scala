@@ -8,124 +8,115 @@ import org.apache.spark.sql.functions._
   * (reference `_rank_and_ties`, /root/reference/dask_mwu/rank_data.py:90-201;
   * scipy `method='average'`, `nan_policy='propagate'` hardcoded at :182-184).
   *
-  * Spark-first design: the reference's per-column-chunk kernel becomes ONE
-  * hash shuffle on `feature_id` followed by two Window operators sharing
-  * that partitioning (no second exchange):
+  * Every rank of the MWU core comes from one kernel, [[prefixRank]]. A
+  * rank is a prefix count: over weighted (feature_id, value[, grp]) rows,
   *
-  *   - `min_rank` = SQL RANK() (min-rank of the tie block)
-  *   - `tie_count` = COUNT(*) over the same ordered window with a
-  *     RANGE CURRENT ROW frame → number of peers (rows equal in `value`),
-  *     which avoids a separate shuffle on (feature_id, value)
-  *   - avg rank = min_rank + (tie_count-1)/2 — the mean of the tie block
-  *     [min, min+c-1]; dyadic-exact in double
+  *   avg_rank(v) = C_{<v} + (t_v + 1)/2
   *
-  * NaN/null propagation (reference rank_data.py:193-196): any NaN in a
-  * feature makes every rank of that feature NULL; tie counts stay finite
-  * (only ranks are overwritten in the reference, SURVEY.md §1.2).
+  * with C_{<v} the weight of the feature's values below v and t_v the
+  * weight of v's peers. Weight 1 per cell gives the per-cell ranks of
+  * [[withRanks]]; (feature, value[, grp]) counts give [[ranksByValue]]
+  * and [[MwuAgg.rankSumsAgg]], whose windows sort distinct values
+  * instead of cells.
   *
-  * Scale: partitions = features × hash, each window sorts only one
-  * feature's rows (spillable sort). 100 TB ⇒ raise shuffle partitions;
-  * skew-free by construction (every feature has n_obs rows).
+  * Plan: the prefix count is two-level, so no task sorts a whole
+  * feature. One hash exchange on (feature_id, value bucket) carries the
+  * rows into the local windows; the feature×bucket offset table costs
+  * two small exchanges (its map-side-combined aggregate and its
+  * per-feature offset window) and is broadcast back. That is three hash
+  * exchanges, one of them row-sized.
+  *
+  * NaN/null propagation (reference rank_data.py:193-196): any NaN or NULL
+  * value in a feature makes every rank of that feature NULL; tie counts
+  * stay finite (only ranks are overwritten in the reference, SURVEY.md
+  * §1.2).
   */
 object Ranking {
 
   def isBad(c: Column): Column = c.isNull || isnan(c)
 
   /** Adds `rank` (DOUBLE, null on NaN-poisoned features), `tie_count`
-    * (LONG), `feature_has_nan` (BOOLEAN) to a cells-like frame.
+    * (LONG), `feature_has_nan` (BOOLEAN) to a cells-like frame — the
+    * kernel at weight 1 per cell.
     *
-    * r16 (`bucketSplit = true`, the default): the per-feature window
-    * sorted ALL of a feature's cells in one task (parallelism =
-    * |features|; at sf0.1 one task sorted 2.4 M cells — the cost center
-    * of every per-cell rank consumer). A rank is a prefix count, so it
-    * distributes two-level exactly like [[MwuAgg.rankSumsAgg]]:
-    * [[graft.functions.DoubleSortBucket]] splits each feature's value
-    * axis deterministically and monotonically, RANK() runs locally per
-    * (feature, bucket), and each bucket's broadcast offset (row count of
-    * all lower buckets) restores the global min-rank integer exactly —
-    * peers never straddle a bucket, so `tie_count` is local, and the
-    * final `rank` double is computed from the identical integer operands
-    * (dyadic-exact, so bit-equal; PropertySpec/RankingSpec pin it).
-    *
-    * `bucketSplit = false` keeps the single-window spelling whose
-    * partition key is exactly the bucketed-cells table's bucket hash —
-    * the `mwu_rank_bucket` gate's declared ZERO-exchange plan (PlanSpec
-    * pins it); the split spelling would add (feature, bucket) and
-    * (feature, grp) exchanges that layout exists to avoid. */
-  def withRanks(cells: DataFrame, valueCol: String = "value",
-                featureCol: String = "feature_id",
-                bucketSplit: Boolean = true): DataFrame = {
-    val v = col(valueCol)
-    if (!bucketSplit) {
-      val wOrd = Window.partitionBy(featureCol).orderBy(v)
-      val wPeers = wOrd.rangeBetween(Window.currentRow, Window.currentRow)
-      val wFeat = Window.partitionBy(featureCol)
-      cells
-        .withColumn("tie_count", count(lit(1)).over(wPeers))
-        .withColumn("min_rank", rank().over(wOrd).cast("long"))
-        .withColumn("feature_has_nan", max(isBad(v)).over(wFeat))
-        .withColumn("rank",
-          when(col("feature_has_nan"), lit(null).cast("double"))
-            .otherwise(col("min_rank") + (col("tie_count") - 1L) / 2.0))
-        .drop("min_rank")
-    } else {
-      graft.functions.GraftFunctions.register(cells.sparkSession)
-      val withVb = cells.withColumn("_vb", expr(s"double_sort_bucket(`$valueCol`)"))
-      val wOrd = Window.partitionBy(featureCol, "_vb").orderBy(v)
-      val wPeers = wOrd.rangeBetween(Window.currentRow, Window.currentRow)
-      val wOff = Window.partitionBy(featureCol).orderBy("_vb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      // bucket offsets + the feature NaN flag: feature×bucket-sized,
-      // broadcast; NULL-SAFE on the bucket (null values bucket to null
-      // and must keep flowing — only their ranks null out)
-      val bt = withVb.groupBy(featureCol, "_vb")
-        .agg(count(lit(1)).as("_bc"), max(isBad(v)).as("_p_nan"))
-        .withColumn("_off", coalesce(sum("_bc").over(wOff), lit(0L)))
-        .withColumn("_f_nan",
-          max(col("_p_nan")).over(Window.partitionBy(featureCol)))
-        .select(col(featureCol).as("_bt_f"), col("_vb").as("_bt_vb"),
-          col("_off"), col("_f_nan"))
-      withVb
-        .withColumn("tie_count", count(lit(1)).over(wPeers))
-        .withColumn("_lrk", rank().over(wOrd).cast("long"))
-        .join(broadcast(bt),
-          col(featureCol) === col("_bt_f") && col("_vb") <=> col("_bt_vb"))
-        .withColumn("feature_has_nan", col("_f_nan"))
-        .withColumn("rank",
-          when(col("feature_has_nan"), lit(null).cast("double"))
-            .otherwise((col("_off") + col("_lrk")) + (col("tie_count") - 1L) / 2.0))
-        .drop("_vb", "_lrk", "_bt_f", "_bt_vb", "_off", "_f_nan")
-    }
-  }
+    * `bucketSplit = false` keeps one window per feature, whose partition
+    * key is exactly the bucketed-cells table's bucket hash: the
+    * `mwu_rank_bucket` gate's declared ZERO-exchange plan (PlanSpec pins
+    * it), which the split's (feature, bucket) exchanges would break. */
+  def withRanks(cells: DataFrame, bucketSplit: Boolean = true): DataFrame =
+    prefixRank(cells, lit(1L), bucketSplit)
 
   /** [[withRanks]] collapsed to PER-DISTINCT-VALUE rows — (feature_id,
-    * value, tie_count, rank), the relation `mwu_rank` materializes —
-    * computed the tied-data scale way ([[MwuAgg.rankSumsAgg]]'s route):
-    * cells collapse to (feature, value) counts FIRST (map-side combine,
-    * so only distinct-value rows ever reach the sort), then one
-    * cumulative window derives min-rank and tie size per distinct
-    * value. On heavy-tie corpora the window input shrinks from n rows
-    * to d distinct values (the replicated 10× corpus keeps d FIXED
-    * while n grows 10× — the verdict-r12 slope probe); identical
-    * output by the rank identities: tie_count(v) = t(v) and
-    * min_rank(v) = cum(v) − t(v) + 1, NaN poisoning unchanged. Not a
-    * replacement for [[withRanks]] where per-CELL ranks are the API
+    * value, tie_count, rank), the relation `mwu_rank` materializes.
+    * Cells collapse to (feature, value) counts first (map-side combine),
+    * so only distinct values reach the kernel's sort: on heavy-tie
+    * corpora the sorted input shrinks from n cells to d values. Not a
+    * replacement for [[withRanks]] where per-cell ranks are the API
     * surface. */
-  def ranksByValue(cells: DataFrame, valueCol: String = "value",
-                   featureCol: String = "feature_id"): DataFrame = {
-    val wOrd = Window.partitionBy(featureCol).orderBy(valueCol)
-    val wCum = wOrd.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val wFeat = Window.partitionBy(featureCol)
-    cells
-      .groupBy(featureCol, valueCol)
-      .agg(count(lit(1)).as("tie_count"))
-      .withColumn("cum", sum("tie_count").over(wCum))
-      .withColumn("f_nan", max(isBad(col(valueCol))).over(wFeat))
-      .withColumn("rank",
-        when(col("f_nan"), lit(null).cast("double"))
-          .otherwise((col("cum") - col("tie_count") + 1L) +
-            (col("tie_count") - 1L) / 2.0))
-      .select(col(featureCol), col(valueCol), col("tie_count"), col("rank"))
+  def ranksByValue(cells: DataFrame): DataFrame =
+    prefixRank(cells.groupBy("feature_id", "value").agg(count(lit(1)).as("c")),
+      col("c"), split = true)
+      .select("feature_id", "value", "tie_count", "rank")
+
+  /** The exact prefix rank over `rows` carrying `feature_id` and `value`,
+    * each row weighing `weight` (1 per cell, or the count of equal rows
+    * it stands for). Adds
+    *   - `tie_count` = t, the weight of the row's peers (equal values);
+    *   - `rank` = C_{<v} + (t+1)/2, NULL for the whole feature when any
+    *     of its values is NULL or NaN;
+    *   - `feature_has_nan`.
+    *
+    * `split` (the default path) buckets each feature's value axis with
+    * `double_sort_bucket` — deterministic and monotone, so equal values
+    * share a bucket and buckets order like their values. The windows run
+    * per (feature, bucket): a local running weight and the peer weight
+    * t. A feature×bucket table holds each bucket's offset (the weight of
+    * all lower buckets) and the feature's NaN flag; it is broadcast and
+    * joined NULL-SAFE on both keys (a NULL feature ranks like any other;
+    * a NULL value buckets to NULL, which sorts first like the value).
+    * offset + local running weight restores the global integer exactly,
+    * and every rank is a dyadic rational below 2^53, so the result is
+    * bit-equal to the single-window spelling (`split = false`: one
+    * window per feature, offset 0) in any plan.
+    *
+    * Working columns carry the reserved prefix `__rank_` and are dropped
+    * again; every other caller column passes through (a caller
+    * `tie_count`, `rank` or `feature_has_nan` is overwritten). */
+  private[operators] def prefixRank(rows: DataFrame, weight: Column,
+                                    split: Boolean): DataFrame = {
+    val Seq(vb, cum, off, fNan, btF, btB) =
+      Seq("vb", "cum", "off", "fnan", "bt_f", "bt_b").map("__rank_" + _)
+    val v = col("value")
+    val keyed = if (split) {
+      graft.functions.GraftFunctions.register(rows.sparkSession)
+      rows.withColumn(vb, expr("double_sort_bucket(value)"))
+    } else rows
+    val keys = if (split) Seq(col("feature_id"), col(vb)) else Seq(col("feature_id"))
+    val wOrd = Window.partitionBy(keys: _*).orderBy(v)
+    val local = keyed
+      .withColumn(cum, sum(weight).over(
+        wOrd.rangeBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("tie_count", sum(weight).over(
+        wOrd.rangeBetween(Window.currentRow, Window.currentRow)))
+    val placed = if (split) {
+      // `off` first holds the bucket's own weight, then the weight of
+      // all lower buckets of the feature
+      val bt = keyed.groupBy(col("feature_id").as(btF), col(vb).as(btB))
+        .agg(sum(weight).as(off), max(isBad(v)).as(fNan))
+        .withColumn(off, coalesce(sum(off).over(Window.partitionBy(btF).orderBy(btB)
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn(fNan, max(fNan).over(Window.partitionBy(btF)))
+      local.join(broadcast(bt), col("feature_id") <=> col(btF) && col(vb) <=> col(btB))
+    } else {
+      local.withColumn(off, lit(0L))
+        .withColumn(fNan, max(isBad(v)).over(Window.partitionBy("feature_id")))
+    }
+    placed
+      .withColumn("feature_has_nan", col(fNan))
+      .withColumn("rank", when(col(fNan), lit(null).cast("double"))
+        .otherwise((col(off) + col(cum) - col("tie_count")).cast("double") +
+          (col("tie_count") + 1L) / 2.0))
+      .drop(vb, cum, off, fNan, btF, btB)
   }
 
   /** Oracle-SQL rendering of the same computation, including the NaN

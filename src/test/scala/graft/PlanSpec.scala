@@ -30,6 +30,16 @@ class PlanSpec extends SparkSpec {
       s"expected the (feature_id, _vb) window exchange:\n$p")
   }
 
+  test("measured MWU path: markerStats and rankSumsAgg keep their hash-exchange budget") {
+    // both end-to-end spellings share the prefix-rank kernel; the kernel
+    // must not add a hash exchange to either
+    val cells = QueriesMwu.liCells(spark, sf("sf0.001"))
+    val marker = plan(graft.operators.Pipeline.markerStats(spark, cells))
+    val agg = plan(MwuAgg.rankSumsAgg(cells))
+    assert("Exchange hashpartitioning".r.findAllIn(marker).length == 11, marker)
+    assert("Exchange hashpartitioning".r.findAllIn(agg).length == 7, agg)
+  }
+
   test("marker pipeline broadcasts the feature-sized side tables") {
     val p = plan(SparkEntry.queries("mwu_markers")(spark, sf("sf0.001")))
     assert(p.contains("BroadcastHashJoin"), p)

@@ -212,6 +212,27 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("NULL-feature rows are ranked by every rank spelling, and the spellings agree — 4 random cases") {
+    for ((vals, gs) <- cases(4)) {
+      val cells = cellsOf("f", vals, gs).unionAll(cellsOf(null, vals.map(-_), gs))
+      def ranks(df: org.apache.spark.sql.DataFrame) =
+        df.select("feature_id", "grp", "value", "tie_count", "rank").collect()
+          .map(r => (Option(r.getString(0)), r.getString(1), r.getDouble(2),
+            r.getLong(3), r.getDouble(4))).sorted.toSeq
+      val split = ranks(Ranking.withRanks(cells))
+      assert(split.size == 2 * vals.size, s"rows dropped: $split")
+      assert(split == ranks(Ranking.withRanks(cells, bucketSplit = false)))
+      def sums(df: org.apache.spark.sql.DataFrame) =
+        df.select("feature_id", "grp", "rank_sum", "n1", "n").collect()
+          .map(r => (Option(r.getString(0)), r.getString(1)) ->
+            (r.getDouble(2), r.getLong(3), r.getLong(4))).toMap
+      val agg = sums(MwuAgg.rankSumsAgg(cells))
+      assert(agg.keySet.exists(_._1.isEmpty), s"NULL feature dropped: $agg")
+      assert(agg == sums(MwuAgg.rankSums(Ranking.withRanks(cells))))
+      assert(agg == sums(MwuAgg.rankSums(Ranking.withRanks(cells, bucketSplit = false))))
+    }
+  }
+
   test("as-of join equals the brute-force at-or-before lookup — 5 random cases") {
     import spark.implicits._
     val genEvents: Gen[List[(Long, Long, Long, Double)]] = for {

@@ -56,4 +56,43 @@ class RankingSpec extends SparkSpec {
     }
     assert(results(0) == results(1) && results(1) == results(2))
   }
+
+  test("caller columns pass through withRanks unchanged (working columns are reserved)") {
+    // `_vb` / `_off` are ordinary caller names (they were once the kernel's
+    // own working columns); they must come back untouched
+    val cells = cellsOf("f", Seq(3.0, 1.0, 3.0, 2.0, 5.0, 1.0), g6)
+      .withColumn("_vb", lit("caller")).withColumn("_off", lit(7L))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("grp", "value", "_vb", "_off", "tie_count", "rank").collect()
+        .map(r => (r.getString(0), r.getDouble(1), r.getString(2), r.getLong(3),
+          r.getLong(4), r.getDouble(5))).sorted.toSeq
+    val split = rows(Ranking.withRanks(cells))
+    assert(split.forall(r => r._3 == "caller" && r._4 == 7L), split)
+    assert(split == rows(Ranking.withRanks(cells, bucketSplit = false)))
+  }
+
+  private def oneValueFeature(n: Long, values: Int = 1) =
+    spark.range(n * values).select(lit("f").as("feature_id"),
+      (col("id") % values).cast("double").as("value"), lit("a").as("grp"))
+
+  test("tie term is exact at the BIGINT edge: t = 2^21 gives (t-1)·t·(t+1)") {
+    // t³ alone is 2^63 — only the factored product stays inside BIGINT
+    val tt = MwuAgg.tieTerm(oneValueFeature(2097152L)).collect().head.getLong(1)
+    assert(tt == 9223372036852678656L)
+  }
+
+  private def overflowed(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val e = intercept[Exception](df.collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("MWU_TIE_TERM_OVERFLOW"))
+  }
+
+  test("tie term never wraps: one value repeated 2^21+1 times raises a named error") {
+    assert(overflowed(MwuAgg.tieTerm(oneValueFeature(2097153L))))
+  }
+
+  test("tie term never wraps: a per-feature sum past BIGINT raises a named error") {
+    // two values of t = 2^21: each term fits, their sum does not
+    assert(overflowed(MwuAgg.tieTerm(oneValueFeature(2097152L, values = 2))))
+  }
 }
