@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Host-speed calibration: a FROZEN, data-free, CPU-bound micro-run
     * timed once per pass and recorded in the artifact. The host's speed
@@ -38,25 +38,74 @@ object Bench {
   def evalRows(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the session (codegen, file listing, parquet footers) and the
-    // OS page cache for EVERY input table, so no measured query absorbs
-    // one-time init or a cold first read (round-1 driver runs showed a
-    // single cold documents scan inflating one query 8×)
+  /** Warm the session (codegen, file listing, parquet footers) and the
+    * OS page cache for EVERY input table, so no measured query absorbs
+    * one-time init or a cold first read (round-1 bench runs showed a
+    * single cold documents scan inflating one query 8×). */
+  def warmTables(spark: SparkSession, sfDir: String): Unit =
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
       "region", "events", "documents", "embeddings").foreach { t =>
       try graft.sources.Tables.read(spark, sfDir, t).foreach(_ => ())
       catch { case _: Throwable => }
     }
+
+  /** Free what a query left behind, outside any timed window.
+    * Iterative queries (pageRank, BPE, LR, label propagation) pin their
+    * localCheckpoint RDD blocks in the block manager; left alone they
+    * accumulate across the run and slow later queries (measured: pass-2
+    * pageRank 20 s vs 11 s isolated). A real deploy's jobs exit their
+    * JVMs; the shared-session bench must clean up between queries
+    * instead — BLOCKING, so the eviction work lands outside the next
+    * query's timed window. Then start the next query from a settled
+    * heap: without the gc, a heavy predecessor's garbage lands in the
+    * successor's timed window (same neighbor effect the sorted order
+    * pins). */
+  def settle(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
+
+  /** One pass's outcome: wall seconds and output rows of each query that
+    * returned, and the exception of each query that threw. */
+  final case class Pass(sec: Map[String, Double], rows: Map[String, Long],
+                        failed: Map[String, Throwable])
+
+  /** One timed pass over `selected`, in order, under [[evalRows]]. A
+    * query that throws gets no time: it is printed as
+    * `BENCH_FAIL <name>: <exception>` and returned in `failed`. */
+  def timePass(spark: SparkSession, sfDir: String,
+               selected: Seq[(String, (SparkSession, String) => DataFrame)]): Pass = {
+    val sec = Map.newBuilder[String, Double]
+    val rows = Map.newBuilder[String, Long]
+    val failed = Map.newBuilder[String, Throwable]
+    selected.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        rows += name -> evalRows(fn(spark, sfDir))
+        sec += name -> (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        println(s"BENCH_FAIL $name: $e")
+        failed += name -> e
+      }
+      settle(spark)
+    }
+    Pass(sec.result(), rows.result(), failed.result())
+  }
+
+  /** The sorted names of the queries that threw in ANY pass, and each
+    * pass's time map without them: a failure must never read as a time,
+    * so it stays out of every per-query map and every total. */
+  def dropFailed(passes: Seq[Pass]): (Seq[String], Seq[Map[String, Double]]) = {
+    val failed = passes.flatMap(_.failed.keys).distinct.sorted
+    (failed, passes.map(_.sec -- failed))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = LocalSession.sfDir
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
+    warmTables(spark, sfDir)
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (local iteration only; the
     // harness never sets it, so driver rounds always measure everything)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -77,10 +126,6 @@ object Bench {
     // totals and per-pass maps are kept so run-to-run variance is
     // visible in the artifact.
     val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
-    // per-query OUTPUT row counts (evalRows computes them anyway):
-    // recorded in the artifact so a future statistic or plan change
-    // decomposes into rows×cost without re-running old shas (verdict r12)
-    val rowCounts = scala.collection.mutable.Map.empty[String, Long]
     // one UNTIMED calibration first: the timed per-pass runs must
     // measure host speed, not the micro-run's own JIT/codegen warm-up
     // (measured: cold 0.95 s vs warm ~0.3 s on the same host)
@@ -88,38 +133,22 @@ object Bench {
     val calibrations = scala.collection.mutable.ArrayBuffer.empty[Double]
     val passes = (1 to rounds).map { _ =>
       calibrations += calibrate(spark)
-      selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val n = try { evalRows(fn(spark, sfDir)) }
-                catch { case _: Throwable => -1L }
-        val sec = (System.nanoTime() - t0) / 1e9
-        rowCounts(name) = n
-        // iterative queries (pageRank, BPE, LR, label propagation) pin
-        // their localCheckpoint RDD blocks in the block manager; left
-        // alone they accumulate across the run and slow later queries
-        // (measured: pass-2 pageRank 20 s vs 11 s isolated). A real
-        // deploy's jobs exit their JVMs; the shared-session bench must
-        // clean up between queries instead — BLOCKING, so the eviction
-        // work lands outside the next query's timed window.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        // start the next query from a settled heap: without this, a
-        // heavy predecessor's garbage lands in the successor's timed
-        // window (same neighbor effect the sorted order pins) — the gc
-        // runs OUTSIDE the timed window by construction
-        System.gc()
-        name -> sec
-      }.toMap
+      timePass(spark, sfDir, selected)
     }
-    val results = selected.map { case (name, _) =>
-      name -> passes.map(_(name)).min
-    }.toMap
+    val (failed, perPassSec) = dropFailed(passes)
+    val timed = selected.map(_._1).filterNot(failed.contains)
+    // per-query OUTPUT row counts (evalRows computes them anyway):
+    // recorded in the artifact so a future statistic or plan change
+    // decomposes into rows×cost without re-running old shas (verdict r12)
+    val rowCounts = timed.map(n => n -> passes.last.rows(n))
+    val results = timed.map(n => n -> perPassSec.map(_(n)).min).toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val passTotals = passes.map(_.values.sum).mkString("[", ",", "]")
+    val passTotals = perPassSec.map(_.values.sum).mkString("[", ",", "]")
     val calib = calibrations.mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"pass_totals":$passTotals,"calibration":$calib,"sf":"$sfDir"}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"pass_totals":$passTotals,"calibration":$calib,"sf":"$sfDir"}"""
     println(line)
     // the driver's BENCH_r{N}.json preserves only a truncated log tail
     // (round 7 kept 26 of 242 per-query times) — persist the FULL
@@ -127,13 +156,13 @@ object Bench {
     // checks across rounds never starve. Per-pass maps included: the
     // min hides run-to-run variance the comparison needs to see.
     try {
-      val perPass = passes.zipWithIndex.map { case (p, i) =>
+      val perPass = perPassSec.zipWithIndex.map { case (p, i) =>
         "\"pass" + (i + 1) + "\":" + p.toSeq.sortBy(_._1)
           .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
       }.mkString(",")
-      val rowsJson = rowCounts.toSeq.sortBy(_._1)
+      val rowsJson = rowCounts
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val full = s"""{"artifact":"full per-query bench (min over $rounds passes; per-pass maps for variance)","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"total_sec":$total,"pass_totals":$passTotals,"calibration":$calib,"queries":$qs,"rows":$rowsJson,$perPass}"""
+      val full = s"""{"artifact":"full per-query bench (min over $rounds passes; per-pass maps for variance)","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"total_sec":$total,"pass_totals":$passTotals,"calibration":$calib,"queries":$qs,"failed":$failedJson,"rows":$rowsJson,$perPass}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
         full.getBytes("UTF-8"))
     } catch { case e: Throwable =>

@@ -1,29 +1,21 @@
 package graft
 
 import graft.operators._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale stress: widen lineitem into F synthetic features (F × 600k cells
-  * at sf0.1) and run the full MWU pipeline — evidence that the plan
-  * scales in the feature dimension (features shard freely across the
-  * hash shuffle; every feature has n_obs rows, so partitions stay
-  * balanced by construction).
+/** Scale legs: each checks a claim the registry sweep (`sf1full`, every
+  * gate at 10× rows) cannot — an equality or bound asserted at scale, a
+  * growth axis the sweep does not grow, or a committed artifact.
   *
-  * `SPARK_GRAFT_SF_DIR=… sbt "runMain graft.ScaleStress [nFeatures]"`
+  * `SPARK_GRAFT_SF_DIR=… sbt "runMain graft.ScaleStress <leg> [args]"`
   *
-  * Second leg: replicate the documents table M× (fresh doc_ids, texts
-  * perturbed with a replica-tagged token so replicas are near- but not
-  * exact duplicates) and run MinHash LSH end-to-end — evidence that
-  * candidate generation stays bounded when the corpus grows: pair count
-  * scales with the number of true near-dup clusters, not quadratically.
-  *
-  * `sbt "runMain graft.ScaleStress dedup [replicas]"`
-  *
-  * Third leg: replicate embeddings M× and run IVF top-k with a fixed
-  * query count — per-query cost stays ~nprobe/nlist of the corpus.
-  *
-  * `sbt "runMain graft.ScaleStress ann [replicas]"`
+  * A numeric first argument (or none) runs the feature-width MWU leg:
+  * lineitem widened into F synthetic features (F × 600k cells at sf0.1)
+  * through the full marker pipeline — evidence that the plan scales in
+  * the feature dimension (features shard freely across the hash
+  * shuffle; every feature has n_obs rows, so partitions stay balanced by
+  * construction). `sbt "runMain graft.ScaleStress [nFeatures]"`
   */
 object ScaleStress {
   /** Wall-clock / layout expectations are MEASUREMENTS, not invariants:
@@ -40,134 +32,111 @@ object ScaleStress {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("dedup")) { dedupStress(args.drop(1)); return }
-    if (args.headOption.contains("ann")) { annStress(args.drop(1)); return }
-    if (args.headOption.contains("dedupdegen")) { dedupDegenStress(args.drop(1)); return }
-    if (args.headOption.contains("decontam")) { decontamStress(args.drop(1)); return }
-    if (args.headOption.contains("bloom")) { bloomStress(args.drop(1)); return }
-    if (args.headOption.contains("decontamskew")) { decontamSkewStress(args.drop(1)); return }
-    if (args.headOption.contains("graph")) { graphStress(args.drop(1)); return }
-    if (args.headOption.contains("ranks")) { ranksStress(args.drop(1)); return }
-    if (args.headOption.contains("spans")) { spansStress(args.drop(1)); return }
-    if (args.headOption.contains("bpe")) { bpeStress(args.drop(1)); return }
-    if (args.headOption.contains("pq")) { pqStress(args.drop(1)); return }
-    if (args.headOption.contains("pqtrain")) { pqTrainStress(args.drop(1)); return }
-    if (args.headOption.contains("events")) { eventsStress(args.drop(1)); return }
-    if (args.headOption.contains("lr")) { lrStress(args.drop(1)); return }
-    if (args.headOption.contains("skew")) { skewStress(args.drop(1)); return }
-    if (args.headOption.contains("triangles")) { triangleStress(args.drop(1)); return }
-    if (args.headOption.contains("lpa")) { lpaStress(args.drop(1)); return }
-    if (args.headOption.contains("winnow")) { winnowStress(args.drop(1)); return }
-    if (args.headOption.contains("sparse")) { sparseStress(args.drop(1)); return }
-    if (args.headOption.contains("semdedup")) { semDedupStress(args.drop(1)); return }
-    if (args.headOption.contains("mwuskew")) { mwuSkewStress(args.drop(1)); return }
-    if (args.headOption.contains("skewjoin")) { skewJoinStress(args.drop(1)); return }
-    if (args.headOption.contains("hilbert")) { hilbertStress(args.drop(1)); return }
-    if (args.headOption.contains("metrics")) { metricsProbe(args.drop(1)); return }
-    if (args.headOption.contains("curate")) { curateStress(args.drop(1)); return }
-    if (args.headOption.contains("lm")) { lmStress(args.drop(1)); return }
-    if (args.headOption.contains("cc")) { ccStress(args.drop(1)); return }
-    if (args.headOption.contains("allpairs")) { allPairsStress(args.drop(1)); return }
-    if (args.headOption.contains("pca")) { pcaStress(args.drop(1)); return }
-    if (args.headOption.contains("pqstored")) { pqStoredStress(args.drop(1)); return }
-    if (args.headOption.contains("sf1")) { sf1Stress(args.drop(1)); return }
-    if (args.headOption.contains("sf1full")) { sf1FullStress(args.drop(1)); return }
-    if (args.headOption.contains("appendproof")) { appendProofStress(args.drop(1)); return }
-    if (args.headOption.contains("serveproof")) { serveProofStress(args.drop(1)); return }
-    if (args.headOption.contains("neardupserve")) { nearDupServeStress(args.drop(1)); return }
-    if (args.headOption.contains("neardupcrudab")) { nearDupCrudAbStress(args.drop(1)); return }
-    if (args.headOption.contains("nearduphist")) { nearDupHistProbe(args.drop(1)); return }
-    if (args.headOption.contains("nearduprecall")) { nearDupRecallStress(args.drop(1)); return }
-    if (args.headOption.contains("canary")) { canaryStress(args.drop(1)); return }
-    if (args.headOption.contains("rebuildproof")) { rebuildProofStress(args.drop(1)); return }
-    val nFeat = if (args.nonEmpty) args(0).toInt else 32
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** A leg runs on the shared session over the input tables' dir with
+    * the arguments after its name. */
+  type Leg = (SparkSession, String, Array[String]) => Unit
 
-    val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
-    // F deterministic synthetic features per row: value_i = log1p of a
-    // per-feature affine mix of the measures (distinct distributions, all
-    // positive); grp = l_returnflag
-    val cells = li.select(col("l_returnflag").as("grp"),
+  val legs: Map[String, Leg] = Map(
+    "sf1full" -> sf1FullStress,
+    "appendproof" -> appendProofStress,
+    "serveproof" -> serveProofStress,
+    "nearduprecall" -> nearDupRecallStress,
+    "neardupserve" -> nearDupServeStress,
+    "rebuildproof" -> rebuildProofStress,
+    "dedupdegen" -> dedupDegenStress,
+    "lpa" -> lpaStress,
+    "allpairs" -> allPairsStress,
+    "winnow" -> winnowStress,
+    "skewjoin" -> skewJoinStress,
+    "hilbert" -> hilbertStress,
+    "mwuskew" -> mwuSkewStress)
+
+  /** The leg `args` names and its own arguments: a named leg, or the
+    * feature-width leg for a numeric (or no) first argument; anything
+    * else is a usage message listing the legs. */
+  def resolve(args: Array[String]): Either[String, (Leg, Array[String])] =
+    args.headOption match {
+      case None => Right((featureWidth, args))
+      case Some(a) if a.toIntOption.isDefined => Right((featureWidth, args))
+      case Some(a) => legs.get(a).map(leg => (leg, args.drop(1))).toRight(
+        s"usage: ScaleStress [nFeatures] | <leg> [args]; unknown leg '$a'; " +
+          s"legs: ${legs.keys.toSeq.sorted.mkString(", ")}")
+    }
+
+  def main(args: Array[String]): Unit = resolve(args) match {
+    case Left(usage) =>
+      System.err.println(usage)
+      sys.exit(2)
+    case Right((leg, legArgs)) =>
+      val spark = LocalSession()
+      try leg(spark, LocalSession.sfDir, legArgs) finally spark.stop()
+  }
+
+  /** F deterministic synthetic features per lineitem row: value_i = log1p
+    * of a per-feature affine mix of the measures (distinct distributions,
+    * all positive), grouped by `grp`. */
+  private def syntheticCells(li: DataFrame, nFeat: Int, grp: Column): DataFrame =
+    li.select(grp.as("grp"),
         explode(expr(s"sequence(0, ${nFeat - 1})")).as("fi"),
         col("l_extendedprice"), col("l_quantity"), col("l_discount"))
-      .select(col("grp"),
-        concat(lit("f"), col("fi")).as("feature_id"),
+      .select(col("grp"), concat(lit("f"), col("fi")).as("feature_id"),
         log1p(col("l_extendedprice") * (lit(1.0) + col("fi") * col("l_discount"))
           + col("fi") * col("l_quantity")).as("value"))
 
-    val nCells = cells.count()
-    val t0 = System.nanoTime()
-    val res = Pipeline.markerStats(spark, cells, Pipeline.Config(topN = Some(5)))
-    val n = res.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"mwu_pipeline","features":$nFeat,"cells":$nCells,"out_rows":$n,"sec":$sec%.2f,"cells_per_sec":${(nCells / sec).toLong}}""")
-    spark.stop()
+  /** `m` near-copies of each document: ids `doc_id·m + r`, replica 0 keeps
+    * its text and replica r > 0 gets a ` replica<r>` tag (near- but not
+    * exact duplicates); `keep` columns pass through. */
+  private def taggedReplicas(docs: DataFrame, m: Int, keep: String*): DataFrame =
+    docs.select(col("*"), explode(expr(s"sequence(0, ${m - 1})")).as("r"))
+      .select(Seq((col("doc_id") * m + col("r")).as("doc_id"),
+        when(col("r") === 0, col("text"))
+          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string")))
+          .as("text")) ++ keep.map(col): _*)
+
+  /** `m` copies of each embedding: ids `vec_id·m + r`, every component
+    * shifted by r·1e-3 so the copies stay distinct. */
+  private def jitteredReplicas(emb: DataFrame, m: Int): DataFrame =
+    emb.select(col("vec_id"), col("embedding"), col("label"),
+        explode(expr(s"sequence(0, ${m - 1})")).as("r"))
+      .select((col("vec_id") * m + col("r")).as("vec_id"),
+        expr("transform(embedding, x -> cast(x + cast(r as float) * 1e-3f as float))")
+          .as("embedding"),
+        col("label"))
+
+  /** `m` copies of each document with the alphabet of copy r ROTATED
+    * (translate): copies keep the original's internal near-dup structure
+    * but share no n-gram vocabulary across copies, so true pairs grow ~m×
+    * while a quadratic pair generator would grow m²×. */
+  private def rotatedReplicas(docs: DataFrame, m: Int): DataFrame = {
+    val abc = "abcdefghijklmnopqrstuvwxyz"
+    docs
+      .select(col("doc_id"), col("text"), explode(expr(s"sequence(0, ${m - 1})")).as("r"))
+      .select((col("doc_id") * m + col("r")).as("doc_id"),
+        (0 until m).foldLeft(col("text")) { (acc, r) =>
+          when(col("r") === r,
+            translate(col("text"), abc, abc.drop(r * 7 % 26) + abc.take(r * 7 % 26)))
+            .otherwise(acc)
+        }.as("text"))
+      .localCheckpoint()
   }
 
-  /** Third leg: replicate embeddings M× and run IVF top-k with a fixed
-    * query count — evidence the coarse-quantizer prune keeps per-query
-    * scan cost at ~nprobe/nlist of the corpus as it grows. */
-  private def annStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
-    val blown = emb.select(col("vec_id"), col("embedding"), col("label"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("vec_id") * replicas + col("r")).as("vec_id"),
-        col("embedding"), col("label"))
-    val n = blown.count()
+  private val featureWidth: Leg = featureWidthStress
+
+  /** `f`'s value and its wall seconds. */
+  private def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
-    val out = Similarity.ivfTopK(blown, k = 10, queryEvery = 50 * replicas).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"ann_ivf","replicas":$replicas,"vecs":$n,"out_rows":$out,"sec":$sec%.2f,"vecs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
+    val v = f
+    (v, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Rank-sum plan shoot-out on DISCRETE (heavily tied) measures: the
-    * per-cell path sorts every cell inside the feature shuffle; the
-    * aggregated path ([[MwuAgg.rankSumsAgg]]) collapses cells map-side
-    * and sorts only distinct values. Same bit-exact answer (shared
-    * oracle + PropertySpec); this leg measures the gap as features
-    * widen. `sbt "runMain graft.ScaleStress ranks [nFeatures]"` */
-  private def ranksStress(args: Array[String]): Unit = {
+  private def featureWidthStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val nFeat = if (args.nonEmpty) args(0).toInt else 32
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
     val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
-    // discrete features: integer mixes mod a small domain → ~2k distinct
-    // values per feature regardless of row count (the tied regime)
-    val cells = li.select(col("l_returnflag").as("grp"),
-        explode(expr(s"sequence(0, ${nFeat - 1})")).as("fi"),
-        col("l_quantity"), col("l_partkey"))
-      .select(col("grp"), concat(lit("f"), col("fi")).as("feature_id"),
-        ((col("l_partkey") * (col("fi") + 1L) + col("l_quantity")) % 2048L)
-          .cast("double").as("value"))
-    val n = cells.count()
-    def time(f: => Long): (Long, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (r1, sPerCell) = time(MwuAgg.rankSums(Ranking.withRanks(cells)).count())
-    val (r2, sAgg) = time(MwuAgg.rankSumsAgg(cells).count())
-    assert(r1 == r2, s"row counts diverge: $r1 != $r2")
-    println(f"""{"stress":"rank_plans","features":$nFeat,"cells":$n,"per_cell_sec":$sPerCell%.2f,"agg_sec":$sAgg%.2f,"speedup":${sPerCell / sAgg}%.2f}""")
-    spark.stop()
+    val cells = syntheticCells(li, nFeat, col("l_returnflag"))
+    val nCells = cells.count()
+    val (n, sec) = timed(
+      Pipeline.markerStats(spark, cells, Pipeline.Config(topN = Some(5))).count())
+    println(f"""{"stress":"mwu_pipeline","features":$nFeat,"cells":$nCells,"out_rows":$n,"sec":$sec%.2f,"cells_per_sec":${(nCells / sec).toLong}}""")
   }
 
   /** Adversarial leg for the MinHash gather cap: N byte-identical docs
@@ -176,199 +145,27 @@ object ScaleStress {
     * N-member row per band and OOM the task; with the cap the bucket
     * takes the self-join path and the N²/2 verifications spread across
     * the cluster. `sbt "runMain graft.ScaleStress dedupdegen [nDocs]"` */
-  private def dedupDegenStress(args: Array[String]): Unit = {
+  private def dedupDegenStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toInt else 3000
-    val spark = session()
-    import org.apache.spark.sql.functions._
     val docs = spark.range(nDocs.toLong).select(col("id").as("doc_id"),
       lit("the same boilerplate document body repeated verbatim across the corpus").as("text"))
-    val t0 = System.nanoTime()
     // gatherCap forced tiny so the join fallback carries the whole load
-    val pairs = Dedup.minHashPairs(docs, numHashes = 16, bands = 4,
-      threshold = 0.5, gatherCap = 64).count()
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (pairs, sec) = timed(Dedup.minHashPairs(docs, numHashes = 16, bands = 4,
+      threshold = 0.5, gatherCap = 64).count())
     val expected = nDocs.toLong * (nDocs - 1) / 2
     println(f"""{"stress":"dedup_degenerate","docs":$nDocs,"pairs":$pairs,"expected":$expected,"sec":$sec%.2f}""")
     assert(pairs == expected, s"degenerate clique must yield all pairs: $pairs != $expected")
-    spark.stop()
-  }
-
-  /** Posting-join leg for [[graft.operators.TextOps.sparseRetrieval]]:
-    * replicate the corpus M× with mutated tails while holding the QUERY
-    * COUNT fixed (queryEvery scales with M; replica ids are
-    * d·M + r, so id % (50·M) == 0 selects exactly the original query
-    * docs). Replication multiplies every gram's document frequency and
-    * the corpus size together, so the df·10 ≤ N stop cut keeps the same
-    * gram set — per-query cost grows only with MATCHED postings (linear
-    * in the corpus), never |Q|×N. Per-doc throughput ~flat across two
-    * replica counts is the proof.
-    * `sbt "runMain graft.ScaleStress sparse [replicas]"` */
-  private def sparseStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string"))).as("text"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val out = graft.operators.TextOps
-      .sparseRetrieval(blown, k = 10, queryEvery = 50 * replicas).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"sparse_retrieval","replicas":$replicas,"docs":$n,"out_rows":$out,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Cell-quadratic containment leg for
-    * [[graft.operators.Similarity.semanticDedup]]: replicate the
-    * embedding table M× into DISJOINT cells (replica r gets label
-    * base·M + r), so the corpus grows M× while every cell keeps its
-    * original size — the exact situation the cell blocking is for.
-    * Within-cell pair work per cell is constant ⇒ total wall-clock
-    * should grow ~linearly in M (flat vec/s), even though the pair
-    * predicate is quadratic inside a cell.
-    * `sbt "runMain graft.ScaleStress semdedup [replicas]"` */
-  private def semDedupStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
-    val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
-    val blown = emb.select(col("vec_id"), col("embedding"), col("label"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("vec_id") * replicas + col("r")).as("vec_id"),
-        col("embedding"),
-        (col("label") * replicas + col("r")).cast("int").as("label"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val out = graft.operators.Similarity.semanticDedup(blown).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"semantic_dedup","replicas":$replicas,"vecs":$n,"out_rows":$out,"sec":$sec%.2f,"vecs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Large-eval decontamination leg: replicate documents M× and mark a
-    * THIRD of the corpus as the eval set — far past anything a broadcast
-    * could hold at real scale — and run the inverted-index variant.
-    * `sbt "runMain graft.ScaleStress decontam [replicas]"` */
-  private def decontamStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string"))).as("text"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val out = Dedup.decontaminateJoin(blown, evalEvery = 3).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"decontaminate_join","replicas":$replicas,"docs":$n,"out_rows":$out,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Adversarial HOT-SHINGLE leg for [[Dedup.decontaminateJoin]] — the
-    * documented AQE-skew reliance (Dedup.scala skew note), measured
-    * instead of prose: one boilerplate trigram is prepended to half the
-    * corpus docs and exactly ONE eval doc, so a single join key carries
-    * ~50% of all corpus postings (eval membership stays fixed as the
-    * corpus scales — output stays linear, only the KEY is hot). Run at
-    * two replica counts; per-doc throughput holding ~flat across them is
-    * the proof AQE's skew split bounds the hot task.
-    * `sbt "runMain graft.ScaleStress decontamskew [replicas]"` */
-  private def decontamSkewStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string"))).as("text"))
-    // evalEvery=3: doc 0 is the ONE boilerplate-carrying eval doc; every
-    // even-id non-eval doc carries it too (~half the corpus)
-    val hot = blown.select(col("doc_id"),
-      when((col("doc_id") % 3 =!= 0 && col("doc_id") % 2 === 0) || col("doc_id") === 0,
-        concat(lit("shared boilerplate header "), col("text")))
-        .otherwise(col("text")).as("text"))
-    val n = hot.count()
-    val t0 = System.nanoTime()
-    val out = Dedup.decontaminateJoin(hot, evalEvery = 3).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"decontaminate_skew","replicas":$replicas,"docs":$n,"out_rows":$out,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Bloom-screen counterpart of [[decontamStress]]: same replicated
-    * corpus, same 1/3 eval fraction, but the eval side compresses to the
-    * constant-size bit-position set — the screen should sweep the corpus
-    * in a small fraction of the inverted-index join's time, which is the
-    * entire point of running it first at 100 TB.
-    * `sbt "runMain graft.ScaleStress bloom [replicas]"` */
-  private def bloomStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string"))).as("text"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val out = Dedup.decontaminateBloom(blown, evalEvery = 3).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"decontaminate_bloom","replicas":$replicas,"docs":$n,"out_rows":$out,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** PageRank scale leg: R disjoint copies of the co-purchase graph
-    * (order AND part keys shifted per replica) — R× nodes and edges with
-    * identical structure, so per-edge throughput should hold flat if the
-    * iteration really exchanges only the node-sized rank vector.
-    * `sbt "runMain graft.ScaleStress graph [replicas]"` */
-  private def graphStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
-    val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_partkey")
-    val blown = li.select(col("l_orderkey"), col("l_partkey"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("l_orderkey") * replicas + col("r")).as("l_orderkey"),
-        (col("l_partkey") + col("r") * 10000000L).as("l_partkey"))
-    val t0 = System.nanoTime()
-    val out = graft.operators.Graph.pageRank(blown, topK = 20).collect()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val nodes = out.head.getLong(1)
-    println(f"""{"stress":"graph_pagerank","replicas":$replicas,"nodes":$nodes,"sec":$sec%.2f,"nodes_per_sec":${(nodes / sec).toLong}}""")
-    spark.stop()
   }
 
   /** LPA stress: `replicas` DISJOINT copies of the co-purchase graph
-    * (offset part ids — the [[graphStress]] trick). Communities of each
+    * (order keys renumbered, part ids offset per copy). Communities of each
     * copy are independent, so community count must scale EXACTLY by the
     * replica factor (a structural correctness check at scale, not just a
     * wall-clock one) while per-round exchanges stay node×degree-sized —
     * per-node throughput should hold or improve as fixed per-round
     * overhead amortizes. */
-  private def lpaStress(args: Array[String]): Unit = {
+  private def lpaStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    import org.apache.spark.sql.functions._
     val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_partkey")
     def blow(m: Int) = li.select(col("l_orderkey"), col("l_partkey"),
@@ -376,9 +173,7 @@ object ScaleStress {
       .select((col("l_orderkey") * m + col("r")).as("l_orderkey"),
         (col("l_partkey") + col("r") * 10000000L).as("l_partkey"))
     def leg(m: Int): (Long, Long, Double) = {
-      val t0 = System.nanoTime()
-      val out = graft.operators.Graph.labelCommunities(blow(m)).collect()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (out, sec) = timed(graft.operators.Graph.labelCommunities(blow(m)).collect())
       (out.length.toLong, out.map(_.getLong(1)).sum, sec)
     }
     val (c1, n1, s1) = leg(1)
@@ -387,30 +182,6 @@ object ScaleStress {
       s"disjoint copies must yield exactly ${replicas}x the communities/nodes: " +
         s"got $cR/$c1 communities, $nR/$n1 nodes")
     println(f"""{"stress":"graph_lpa","replicas":$replicas,"communities":$cR,"nodes":$nR,"sec1":$s1%.2f,"secR":$sR%.2f,"nodes_per_sec":${(nR / sR).toLong}}""")
-    spark.stop()
-  }
-
-  /** Triangle stress: `replicas` DISJOINT copies of the co-purchase
-    * graph (offset part ids — same trick as [[graphStress]]). Work
-    * should scale linearly in copies (each copy's wedges are
-    * independent) with fixed per-job overhead amortizing — per-edge
-    * throughput holds or improves. */
-  private def triangleStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_partkey")
-    val blown = li.select(col("l_orderkey"), col("l_partkey"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("l_orderkey") * replicas + col("r")).as("l_orderkey"),
-        (col("l_partkey") + col("r") * 10000000L).as("l_partkey"))
-    val t0 = System.nanoTime()
-    val out = graft.operators.Graph.triangles(blown, topK = 20).collect()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val top1 = out.headOption.map(_.getLong(1)).getOrElse(0L)
-    println(f"""{"stress":"graph_triangles","replicas":$replicas,"top1_tri":$top1,"sec":$sec%.2f}""")
-    spark.stop()
   }
 
   /** Skewed-GROUP MWU leg: the synthetic features are uniform by
@@ -420,33 +191,21 @@ object ScaleStress {
     * the FULL marker pipeline twice on identical cells, once with the
     * natural l_returnflag groups and once with 90% of rows collapsed
     * onto one HOT group, and reports the ratio. The chain is skew-
-    * resistant by design: the rank window partitions by feature_id
-    * (unaffected by group skew), and every per-(feature, group)
+    * resistant by design: the rank window partitions by (feature_id,
+    * value bucket) — the `double_sort_bucket` split of each feature's
+    * value axis, unaffected by group skew — and every per-(feature, group)
     * aggregate combines map-side before the shuffle, so only combined
     * partials travel — the ratio should stay near 1 and the leg asserts
     * it stays under 1.5.
     * `sbt "runMain graft.ScaleStress mwuskew [nFeatures]"` */
-  private def mwuSkewStress(args: Array[String]): Unit = {
+  private def mwuSkewStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val nFeat = if (args.nonEmpty) args(0).toInt else 16
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
     val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
-    def cells(skewed: Boolean) = {
-      val grp =
-        if (skewed) expr("case when l_orderkey % 10 < 9 then 'HOT' else l_returnflag end")
-        else col("l_returnflag")
-      li.select(grp.as("grp"),
-          explode(expr(s"sequence(0, ${nFeat - 1})")).as("fi"),
-          col("l_extendedprice"), col("l_quantity"), col("l_discount"))
-        .select(col("grp"), concat(lit("f"), col("fi")).as("feature_id"),
-          log1p(col("l_extendedprice") * (lit(1.0) + col("fi") * col("l_discount"))
-            + col("fi") * col("l_quantity")).as("value"))
-    }
-    def run(skewed: Boolean): Double = {
-      val t0 = System.nanoTime()
-      Pipeline.markerStats(spark, cells(skewed), Pipeline.Config(topN = Some(5))).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def cells(skewed: Boolean) = syntheticCells(li, nFeat,
+      if (skewed) expr("case when l_orderkey % 10 < 9 then 'HOT' else l_returnflag end")
+      else col("l_returnflag"))
+    def run(skewed: Boolean): Double =
+      timed(Pipeline.markerStats(spark, cells(skewed), Pipeline.Config(topN = Some(5))).count())._2
     run(skewed = false) // warm-up: JIT + codegen, not measured
     val uniform = run(skewed = false)
     val skewedSec = run(skewed = true)
@@ -457,7 +216,6 @@ object ScaleStress {
     println(f"""{"stress":"mwu_skew","features":$nFeat,"cells":$n,"uniform_sec":$uniform%.2f,"skew90_sec":$skewedSec%.2f,"ratio":$ratio%.2f}""")
     timingCheck(ratio < 1.5,
       f"90/10 group skew must not dominate the MWU chain: ratio $ratio%.2f")
-    spark.stop()
   }
 
   /** Auto-salting skew-join leg: a replicated lineitem fact with 90% of
@@ -470,10 +228,8 @@ object ScaleStress {
     * leg asserts (a) identical aggregates from both paths and (b) a
     * wall-clock win for the salted plan.
     * `sbt "runMain graft.ScaleStress skewjoin [replicas]"` */
-  private def skewJoinStress(args: Array[String]): Unit = {
+  private def skewJoinStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 10
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
@@ -500,82 +256,15 @@ object ScaleStress {
         sum(expr("xxhash64(concat(cast(l_quantity as string), '|', " +
           "cast(l_extendedprice as string), '|', cast(w as string)))")).as("s"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).head
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val v = f; (v, (System.nanoTime() - t0) / 1e9)
-    }
     agg(fact.join(dim, "k")) // warm-up: JIT + codegen, not measured
-    val (plainV, plainSec) = time(agg(fact.join(dim, "k")))
-    val (saltV, saltSec) = time(agg(
+    val (plainV, plainSec) = timed(agg(fact.join(dim, "k")))
+    val (saltV, saltSec) = timed(agg(
       graft.operators.SkewJoin.skewJoin(fact, dim, "k", nSalt = 32, hotRatio = 10)))
     assert(plainV == saltV, s"salted join diverged: $plainV vs $saltV")
     val speedup = plainSec / saltSec
     println(f"""{"stress":"skew_join","rows":$n,"plain_sec":$plainSec%.2f,"salted_sec":$saltSec%.2f,"speedup":$speedup%.2f}""")
     timingCheck(speedup > 1.2,
       f"salting a 90%% hot key must beat the one-reducer funnel: $speedup%.2f")
-    spark.stop()
-  }
-
-  /** Per-query physical-cost probe: run any registry query under a
-    * stage-metrics listener and report WHERE the bytes go — input read,
-    * shuffle write/read, memory+disk spill, peak execution memory, task
-    * count — the numbers that decide partitioning and memory sizing on
-    * a real cluster, which wall-clock alone hides. One JSON line per
-    * query. Caveat: `input_mb` counts task-level inputMetrics (RDD /
-    * localCheckpoint reads); DSv2 parquet scans report bytes through
-    * SQL node metrics instead, so a pure-scan query can legitimately
-    * show input_mb 0 — the shuffle/spill/peak columns are the sizing
-    * signals this probe exists for.
-    * `sbt "runMain graft.ScaleStress metrics q1_agg,mwu_rank [sfDir]"` */
-  private def metricsProbe(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: metrics <q1,q2,...> [sfDir]")
-    val names = args(0).split(",").toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val sfDir = args.lift(1).getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = session()
-    names.foreach { q =>
-      val acc = new java.util.concurrent.atomic.AtomicReference(
-        (0L, 0L, 0L, 0L, 0L, 0L, 0L)) // input, shw, shr, memSpill, diskSpill, peakMem, tasks
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) acc.updateAndGet { case (i, sw, sr, ms, ds, pk, n) =>
-            (i + m.inputMetrics.bytesRead,
-              sw + m.shuffleWriteMetrics.bytesWritten,
-              sr + m.shuffleReadMetrics.totalBytesRead,
-              ms + m.memoryBytesSpilled, ds + m.diskBytesSpilled,
-              math.max(pk, m.peakExecutionMemory), n + 1)
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val rows = Bench.evalRows(SparkEntry.queries(q)(spark, sfDir))
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are posted async — drain authoritatively via
-      // LiveListenerBus.waitUntilEmpty (private[spark], reached by
-      // reflection); a slow bus under a bounded spin would exit while
-      // events are queued and silently undercount shuffle/spill
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: ReflectiveOperationException =>
-        // fallback: require 3 CONSECUTIVE unchanged polls, not one
-        var last = -1L; var quiet = 0; var spins = 0
-        while (quiet < 3 && spins < 200) {
-          val cur = acc.get()._7
-          if (cur == last) quiet += 1 else { quiet = 0; last = cur }
-          Thread.sleep(50); spins += 1
-        }
-      }
-      spark.sparkContext.removeSparkListener(listener)
-      val (in, sw, sr, ms, ds, pk, n) = acc.get()
-      def mb(b: Long): Double = b / 1048576.0
-      println(f"""{"stress":"metrics","query":"$q","rows":$rows,"sec":$sec%.2f,"input_mb":${mb(in)}%.1f,"shuffle_write_mb":${mb(sw)}%.1f,"shuffle_read_mb":${mb(sr)}%.1f,"mem_spill_mb":${mb(ms)}%.1f,"disk_spill_mb":${mb(ds)}%.1f,"peak_task_mem_mb":${mb(pk)}%.1f,"tasks":$n}""")
-    }
-    spark.stop()
   }
 
   /** Hilbert-vs-Morton pruning-effectiveness leg: write lineitem under
@@ -589,10 +278,8 @@ object ScaleStress {
     * unit-adjacent walk packs tighter rectangles per file — Morton's
     * quadrant diagonals smear both dimensions across file boundaries).
     * `sbt "runMain graft.ScaleStress hilbert [files]"` */
-  private def hilbertStress(args: Array[String]): Unit = {
+  private def hilbertStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val files = if (args.nonEmpty) args(0).toInt else 16
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
     val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
     val mx = li.agg(max("l_partkey").as("pmax"), max("l_suppkey").as("smax"))
     val bucketed = li.select("l_partkey", "l_suppkey")
@@ -635,103 +322,6 @@ object ScaleStress {
     println(f"""{"stress":"hilbert_prune","files":$files,"morton_files_touched":$zFiles%.2f,"hilbert_files_touched":$hFiles%.2f}""")
     timingCheck(hFiles <= zFiles,
       f"hilbert layout must prune at least as well as morton: $hFiles%.2f vs $zFiles%.2f")
-    spark.stop()
-  }
-
-  /** Composed-pipeline leg: replicate the corpus M× with mutated tails
-    * (near-dup but not byte-identical replicas — so exact dedup keeps
-    * them, line dedup REMOVES their shared lines, and every stage does
-    * real work) and run the full curation pipeline. The claim under
-    * test is that the composition inherits its stages' linear scaling:
-    * per-doc throughput should hold ~flat as the corpus grows.
-    * `sbt "runMain graft.ScaleStress curate [replicas]"` */
-  private def curateStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"), col("lang"), col("source"),
-        col("n_chars"), explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string"))).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val out = graft.operators.Curation.pipeline(blown).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"pipeline_curate","replicas":$replicas,"docs":$n,"out_rows":$out,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** LM-family replication leg: documents M× (perturbed like the curate
-    * leg so vocabulary grows with the corpus) through the bigram-LM
-    * perplexity scorer and the DSIR selector. Both must scale ~linearly:
-    * perplexity is one token-stream pass against vocabulary-keyed joins,
-    * DSIR against a constant 512-bucket table.
-    * `sbt "runMain graft.ScaleStress lm [replicas]"` */
-  private def lmStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"), col("lang"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string"))).as("text"),
-        col("lang"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val ppl = graft.operators.Lm.perplexity(blown).count()
-    val t1 = System.nanoTime()
-    val sel = graft.operators.Lm.dsirSelect(blown).count()
-    val t2 = System.nanoTime()
-    println(f"""{"stress":"lm","replicas":$replicas,"docs":$n,"ppl_rows":$ppl,"sel_rows":$sel,"ppl_sec":${(t1 - t0) / 1e9}%.2f,"dsir_sec":${(t2 - t1) / 1e9}%.2f}""")
-    spark.stop()
-  }
-
-  /** PCA replication leg: embeddings M× (ids renumbered, values jittered
-    * by a per-replica constant so the covariance stays full-rank) through
-    * the full fit+project — the moment pass is the only corpus-sized
-    * stage and must scale linearly; the driver-side eigensolve is
-    * constant. `sbt "runMain graft.ScaleStress pca [replicas]"` */
-  private def pcaStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
-    val blown = emb.select(col("vec_id"), col("embedding"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("vec_id") * replicas + col("r")).as("vec_id"),
-        expr("transform(embedding, x -> cast(x + cast(r as float) * 1e-3f as float))")
-          .as("embedding"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val rows = graft.operators.Pca.project(blown).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"pca","replicas":$replicas,"vecs":$n,"rows":$rows,"sec":$sec%.2f}""")
-    spark.stop()
-  }
-
-  /** Connected-components adversarial leg: ONE path graph of n nodes —
-    * the worst case for any hop-bounded label propagation (diameter =
-    * n-1) and the shape the large-star/small-star fixpoint exists for.
-    * Verifies every node lands in component 0 and reports wall-clock;
-    * doubling n should cost ~2× plus one extra round (O(log² n)
-    * convergence). `sbt "runMain graft.ScaleStress cc [n]"` */
-  private def ccStress(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toInt else 100000
-    val spark = session()
-    val pairs = spark.range(0, n - 1)
-      .selectExpr("id as doc_a", "id + 1 as doc_b")
-    val t0 = System.nanoTime()
-    val labels = graft.operators.Dedup.connectedComponents(pairs)
-    val wrong = labels.filter(col("cluster_id") =!= 0L).count()
-    val total = labels.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"cc","nodes":$n,"labeled":$total,"mislabeled":$wrong,"sec":$sec%.2f}""")
-    spark.stop()
   }
 
   /** All-pairs similarity stress — the Bayardo prefix-filter bound under
@@ -744,31 +334,18 @@ object ScaleStress {
     * REQUIRES the candidate growth to stay linear-ish (< 2M), i.e.
     * candidates track realized selectivity, not N².
     * `sbt "runMain graft.ScaleStress allpairs [replicas]"` */
-  private def allPairsStress(args: Array[String]): Unit = {
+  private def allPairsStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
     val docs = graft.sources.Tables.read(spark, sfDir, "documents")
       .select("doc_id", "text").localCheckpoint()
-    val abc = "abcdefghijklmnopqrstuvwxyz"
-    def rotated(m: Int) = docs
-      .select(col("doc_id"), col("text"), explode(expr(s"sequence(0, ${m - 1})")).as("r"))
-      .select((col("doc_id") * m + col("r")).as("doc_id"),
-        (0 until m).foldLeft(col("text")) { (acc, r) =>
-          when(col("r") === r,
-            translate(col("text"), abc, abc.drop(r * 7 % 26) + abc.take(r * 7 % 26)))
-            .otherwise(acc)
-        }.as("text"))
-      .localCheckpoint()
-    val one = rotated(1)
-    val big = rotated(replicas)
+    val one = rotatedReplicas(docs, 1)
+    val big = rotatedReplicas(docs, replicas)
     val (n1, nM) = (one.count(), big.count())
     for (t <- Seq(0.5, 0.6, 0.8)) {
       def leg(d: org.apache.spark.sql.DataFrame): (Long, Long, Double) = {
         val cand = graft.operators.TextOps.allPairsCandidates(d, t).count()
-        val t0 = System.nanoTime()
-        val pairs = graft.operators.TextOps.allPairsSimilarity(d, t).count()
-        (cand, pairs, (System.nanoTime() - t0) / 1e9)
+        val (pairs, sec) = timed(graft.operators.TextOps.allPairsSimilarity(d, t).count())
+        (cand, pairs, sec)
       }
       val (c1, p1, s1) = leg(one)
       val (cM, pM, sM) = leg(big)
@@ -777,7 +354,6 @@ object ScaleStress {
       require(candRatio < 2.0 * replicas,
         f"candidate growth $candRatio%.1fx at ${replicas}x corpus — quadratic regime (N2 would be ${replicas * replicas}x)")
     }
-    spark.stop()
   }
 
   /** Winnow-overlap stress — the [[allPairsStress]] question for the
@@ -790,103 +366,20 @@ object ScaleStress {
     * family M× larger and true pairs grow M²× BY CONSTRUCTION — that
     * leg measures output growth, this one isolates plan behavior.
     * `sbt "runMain graft.ScaleStress winnow [replicas]"` */
-  private def winnowStress(args: Array[String]): Unit = {
+  private def winnowStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
     val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-      .select("doc_id", "text", "lang", "source", "n_chars").localCheckpoint()
-    val abc = "abcdefghijklmnopqrstuvwxyz"
-    def rotated(m: Int) = docs
-      .select(col("doc_id"), col("text"), explode(expr(s"sequence(0, ${m - 1})")).as("r"))
-      .select((col("doc_id") * m + col("r")).as("doc_id"),
-        (0 until m).foldLeft(col("text")) { (acc, r) =>
-          when(col("r") === r,
-            translate(col("text"), abc, abc.drop(r * 7 % 26) + abc.take(r * 7 % 26)))
-            .otherwise(acc)
-        }.as("text"))
-      .localCheckpoint()
-    def leg(d: org.apache.spark.sql.DataFrame): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.TextOps.winnowOverlap(d).count()
-      (pairs, (System.nanoTime() - t0) / 1e9)
-    }
-    val (p1, s1) = leg(rotated(1))
-    val (pM, sM) = leg(rotated(replicas))
+      .select("doc_id", "text").localCheckpoint()
+    def leg(d: DataFrame): (Long, Double) =
+      timed(graft.operators.TextOps.winnowOverlap(d).count())
+    val (p1, s1) = leg(rotatedReplicas(docs, 1))
+    val (pM, sM) = leg(rotatedReplicas(docs, replicas))
     val ratio = pM.toDouble / math.max(p1, 1L).toDouble
     println(f"""{"stress":"winnow","replicas":$replicas,"pairs1":$p1,"pairsM":$pM,"pair_ratio":$ratio%.2f,"sec1":$s1%.2f,"secM":$sM%.2f}""")
     require(ratio < 2.0 * replicas,
       f"pair growth $ratio%.1fx at ${replicas}x corpus — quadratic regime")
-    spark.stop()
   }
 
-  /** sf1 replication leg: every table copied, lineitem replicated
-    * `replicas`× row-for-row (joins keep their keys; the fact side just
-    * fans out — the exact sf0.1 → sf1 growth axis), written to a local
-    * parquet dir, and the heaviest lineitem-family registry queries run
-    * once each against it. This catches plans that silently tip from
-    * broadcast to sort-merge-with-spill (or worse) between sf0.1 and
-    * sf1: each query must land within ~replicas× of its sf0.1
-    * wall-clock. `sbt "runMain graft.ScaleStress sf1 [replicas]"` */
-  private def sf1Stress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 10
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = s"/tmp/graft_sf1_x$replicas"
-    val spark = session()
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    if (!new java.io.File(s"$outDir/_READY").exists()) {
-      tables.foreach { t =>
-        val df = graft.sources.Tables.read(spark, sfDir, t)
-        val out = if (t == "lineitem")
-          df.withColumn("r", explode(expr(s"sequence(0, ${replicas - 1})"))).drop("r")
-        else df
-        out.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-      }
-      new java.io.File(s"$outDir/_READY").createNewFile()
-    }
-    // the heaviest lineitem-family gate queries (idle-bench tail) — the
-    // ann/retrieval families scale their QUERY SET with the corpus by
-    // construction (every 50th id), so their replication legs hold the
-    // query count fixed instead (pqStress, sparseStress, annStress)
-    val queries = Seq("graph_pagerank", "graph_triangles", "mwu_checkpoint",
-      "mwu_sink", "mwu_markers", "mwu_rank", "mwu_ranksum_agg",
-      "q_join_revenue", "q_important_parts", "q_min_cost")
-    def time(q: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      Bench.evalRows(SparkEntry.queries(q)(spark, dir))
-      (System.nanoTime() - t0) / 1e9
-    }
-    // min over two measured passes: single-shot write/window timings at
-    // this size scatter up to 3× (GC + page-cache state), and the
-    // question is plan capacity, not ambient noise
-    queries.foreach { q =>
-      time(q, sfDir) // warm-up: JIT + codegen, not measured
-      val base = math.min(time(q, sfDir), time(q, sfDir))
-      val big = math.min(time(q, outDir), time(q, outDir))
-      val ratio = big / base
-      println(f"""{"stress":"sf1","query":"$q","replicas":$replicas,"sf01_sec":$base%.2f,"sf1_sec":$big%.2f,"ratio":$ratio%.2f}""")
-    }
-    spark.stop()
-  }
-
-  /** FULL-registry sf1 leg: every fact axis grows `replicas`× — lineitem
-    * row-identical (the aggregate/join fan-out axis), documents as
-    * tagged near-dup replicas (the dedupStress scheme — keeps near-dup
-    * pair growth linear instead of quadratic-by-construction), events
-    * id/user-shifted (per-user session shapes preserved), embeddings
-    * offset (pcaStress scheme) — then EVERY registry query runs once at
-    * sf0.1 and once at the replicated sf1, emitting one JSON line per
-    * query with both wall-clocks and the ratio. This is the long-tail
-    * sweep the ten-query sf1 leg can't give: any plan that silently
-    * tips from broadcast to sort-merge-with-spill (or to a quadratic
-    * candidate join) between sf0.1 and sf1 shows up as an outlier
-    * ratio. Single-pass timings — the question is plan capacity, and
-    * outliers get re-examined individually, so per-query noise is
-    * acceptable. Note: probe-set families (every-50th-id ann/retrieval
-    * queries) grow their QUERY COUNT with the corpus by construction —
-    * their ratios read as work×queries, documented in STATUS.
-    * `sbt "runMain graft.ScaleStress sf1full [replicas]"` */
   /** Append-cost flatness proof — the QUANTITATIVE form of the index
     * lifecycle claim ("ingest cost is shard-proportional; the indexed
     * corpus is never rescanned"): append an IDENTICAL fixed-size shard
@@ -898,46 +391,30 @@ object ScaleStress {
     * replica-tagged trigrams — so its ratio may sit slightly above 1,
     * which the printed sidecar sizes make visible).
     * `sbt "runMain graft.ScaleStress appendproof [replicas]"` */
-  private def appendProofStress(args: Array[String]): Unit = {
+  private def appendProofStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 10
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = graft.sources.Tables.read(spark, sfDir, "documents")
       .localCheckpoint()
     val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
       .localCheckpoint()
     val nDocs = docs.count()
-    def blowDocs(r: Int) = docs
-      .select(col("doc_id"), col("text"), explode(expr(s"sequence(0, ${r - 1})")).as("rr"))
-      .select((col("doc_id") * r + col("rr")).as("doc_id"),
-        when(col("rr") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("rr").cast("string"))).as("text"))
-    def blowEmb(r: Int) = emb
-      .select(col("vec_id"), col("embedding"), col("label"),
-        explode(expr(s"sequence(0, ${r - 1})")).as("rr"))
-      .select((col("vec_id") * r + col("rr")).as("vec_id"),
-        expr("transform(embedding, x -> cast(x + cast(rr as float) * 1e-3f as float))").as("embedding"),
-        col("label"))
     // fresh-id shards, identical content for both targets
     val docShard = docs.select((col("doc_id") + 100000000L * replicas).as("doc_id"),
       col("text")).localCheckpoint()
     val embShard = emb.select((col("vec_id") + 100000000L * replicas).as("vec_id"),
       col("embedding"), col("label")).localCheckpoint()
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def sparseLeg(r: Int): (Double, Long) = {
       val idx = graft.Scratch.dir(s"appendproof_sidx_${r}x_")
       graft.operators.SparseIndex.writeSparseIndex(
-        if (r == 1) docs else blowDocs(r), idx)
-      val t = timed(graft.operators.SparseIndex.appendSparseIndex(docShard, idx))
+        if (r == 1) docs else taggedReplicas(docs, r), idx)
+      val (_, t) = timed(graft.operators.SparseIndex.appendSparseIndex(docShard, idx))
       (t, spark.read.parquet(s"$idx/dfstats").count())
     }
     def annLeg(r: Int): (Double, Long) = {
       val idx = graft.Scratch.dir(s"appendproof_pq_${r}x_")
       graft.operators.Pq.writeIvfPqIndex(
-        if (r == 1) emb else blowEmb(r), idx)
-      val t = timed(graft.operators.Pq.appendIvfPqIndex(embShard, idx))
+        if (r == 1) emb else jitteredReplicas(emb, r), idx)
+      val (_, t) = timed(graft.operators.Pq.appendIvfPqIndex(embShard, idx))
       (t, spark.read.parquet(s"$idx/cellstats").count())
     }
     // warm both code paths once so neither leg absorbs first-run JIT
@@ -947,7 +424,6 @@ object ScaleStress {
     val (a1, c1) = annLeg(1)
     val (aM, cM) = annLeg(replicas)
     println(f"""{"stress":"appendproof","replicas":$replicas,"shard_docs":$nDocs,"sparse_append_1x_sec":$s1%.2f,"sparse_append_${replicas}x_sec":$sM%.2f,"sparse_ratio":${sM / s1}%.2f,"sparse_vocab_1x":$v1,"sparse_vocab_${replicas}x":$vM,"ann_append_1x_sec":$a1%.2f,"ann_append_${replicas}x_sec":$aM%.2f,"ann_ratio":${aM / a1}%.2f,"ann_cells_1x":$c1,"ann_cells_${replicas}x":$cM}""")
-    spark.stop()
   }
 
   /** Serve-cost flatness proof — the QUANTITATIVE form of the stored-
@@ -964,10 +440,8 @@ object ScaleStress {
     * sibling of [[appendProofStress]], which proved the same flatness
     * for the INGEST verbs. `sbt "runMain graft.ScaleStress serveproof
     * [replicas]"` */
-  private def serveProofStress(args: Array[String]): Unit = {
+  private def serveProofStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 10
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = graft.sources.Tables.read(spark, sfDir, "documents")
       .localCheckpoint()
     val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
@@ -985,28 +459,19 @@ object ScaleStress {
       .select((col("doc_id") + col("rr") * nOrigDocs).as("doc_id"),
         when(col("rr") === 0, col("text"))
           .otherwise(concat(col("text"), lit(" replica"), col("rr").cast("string"))).as("text"))
-    def blowEmb(r: Int) = emb
-      .select(col("vec_id"), col("embedding"), col("label"),
-        explode(expr(s"sequence(0, ${r - 1})")).as("rr"))
-      .select((col("vec_id") * r + col("rr")).as("vec_id"),
-        expr("transform(embedding, x -> cast(x + cast(rr as float) * 1e-3f as float))").as("embedding"),
-        col("label"))
     val maxQ = 500L
-    def timed(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime(); val n = f; ((System.nanoTime() - t0) / 1e9, n)
-    }
     def sparseLeg(r: Int): (Double, Long) = {
       val idx = graft.Scratch.dir(s"serveproof_sidx_${r}x_")
       graft.operators.SparseIndex.writeSparseIndex(
         if (r == 1) docs else blowDocs(r), idx)
       timed(graft.operators.SparseIndex
-        .sparseRetrievalStored(spark, idx, maxQ = maxQ).count())
+        .sparseRetrievalStored(spark, idx, maxQ = maxQ).count()).swap
     }
     def annLeg(r: Int): (Double, Long) = {
       val idx = graft.Scratch.dir(s"serveproof_pq_${r}x_")
-      graft.operators.Pq.writeIvfPqIndex(if (r == 1) emb else blowEmb(r), idx)
+      graft.operators.Pq.writeIvfPqIndex(if (r == 1) emb else jitteredReplicas(emb, r), idx)
       timed(graft.operators.Pq
-        .ivfAdcTopKStored(emb, idx, maxQ = maxQ).count())
+        .ivfAdcTopKStored(emb, idx, maxQ = maxQ).count()).swap
     }
     // warm both code paths once so neither leg absorbs first-run JIT
     sparseLeg(1); annLeg(1)
@@ -1015,7 +480,6 @@ object ScaleStress {
     val (a1, ar1) = annLeg(1)
     val (aM, arM) = annLeg(replicas)
     println(f"""{"stress":"serveproof","replicas":$replicas,"fixed_q_cap":$maxQ,"sparse_serve_1x_sec":$s1%.2f,"sparse_serve_${replicas}x_sec":$sM%.2f,"sparse_ratio":${sM / s1}%.2f,"sparse_rows_1x":$sr1,"sparse_rows_${replicas}x":$srM,"ann_serve_1x_sec":$a1%.2f,"ann_serve_${replicas}x_sec":$aM%.2f,"ann_ratio":${aM / a1}%.2f,"ann_rows_1x":$ar1,"ann_rows_${replicas}x":$arM}""")
-    spark.stop()
   }
 
   /** Registry rows whose timed query SERVES a once-per-corpus
@@ -1048,11 +512,25 @@ object ScaleStress {
     "emb_neardup_exact" -> "emb_neardup_probe",
     "ann_rerank" -> "ann_rerank_ivf")
 
-  private def sf1FullStress(args: Array[String]): Unit = {
+  /** FULL-registry sf1 leg: every fact axis grows `replicas`× — lineitem
+    * row-identical (the aggregate/join fan-out axis), documents as
+    * tagged near-dup replicas ([[taggedReplicas]] — keeps near-dup pair
+    * growth linear instead of quadratic-by-construction), events
+    * id/user-shifted (per-user session shapes preserved), embeddings
+    * jittered ([[jitteredReplicas]]) — then EVERY registry query runs
+    * once at sf0.1 and once at the replicated sf1, emitting one JSON line
+    * per query with both wall-clocks and the ratio. Any plan that
+    * silently tips from broadcast to sort-merge-with-spill (or to a quadratic
+    * candidate join) between sf0.1 and sf1 shows up as an outlier
+    * ratio. Single-pass timings — the question is plan capacity, and
+    * outliers get re-examined individually, so per-query noise is
+    * acceptable. Note: probe-set families (every-50th-id ann/retrieval
+    * queries) grow their QUERY COUNT with the corpus by construction —
+    * their ratios read as work×queries, documented in STATUS.
+    * `sbt "runMain graft.ScaleStress sf1full [replicas]"` */
+  private def sf1FullStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 10
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = s"/tmp/graft_sf1full_x$replicas"
-    val spark = session()
     val T = graft.sources.Tables
     if (!new java.io.File(s"$outDir/_READY").exists()) {
       Seq("region", "nation", "customer", "supplier", "part", "orders").foreach { t =>
@@ -1062,20 +540,10 @@ object ScaleStress {
       T.read(spark, sfDir, "lineitem")
         .select(col("*"), rep).drop("r")
         .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-      T.read(spark, sfDir, "documents")
-        .select(col("*"), rep)
-        .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-          when(col("r") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string")))
-            .as("text"),
-          col("lang"), col("source"), col("n_chars"))
+      taggedReplicas(T.read(spark, sfDir, "documents"), replicas,
+          "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-      T.read(spark, sfDir, "embeddings")
-        .select(col("*"), rep)
-        .select((col("vec_id") * replicas + col("r")).as("vec_id"),
-          expr("transform(embedding, x -> cast(x + cast(r as float) * 1e-3f as float))")
-            .as("embedding"),
-          col("label"))
+      jitteredReplicas(T.read(spark, sfDir, "embeddings"), replicas)
         .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
       T.read(spark, sfDir, "events")
         .select(col("*"), rep)
@@ -1154,7 +622,6 @@ object ScaleStress {
       System.gc() // nudge ContextCleaner to reap shuffle files
     }
     timer.cancel()
-    spark.stop()
   }
 
   /** MEASURED recall of the banded near-dup family against the FULL
@@ -1174,19 +641,12 @@ object ScaleStress {
     * denominator, so the banded verdict can flag docs the full probe
     * keeps as well as miss docs it flags — both directions reported.
     * `sbt "runMain graft.ScaleStress nearduprecall [replicas] [sampleMod]"` */
-  private def nearDupRecallStress(args: Array[String]): Unit = {
+  private def nearDupRecallStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 10
     val sampleMod = if (args.length > 1) args(1).toInt else 20
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs0 = graft.sources.Tables.read(spark, sfDir, "documents")
     // the sf1full replica scheme: fresh ids, replica-tagged texts
-    val docs = docs0.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string")))
-          .as("text"))
+    val docs = taggedReplicas(
+      graft.sources.Tables.read(spark, sfDir, "documents"), replicas)
     // incoming docs are doc_id ≡ 4 (mod 5); the sample takes every
     // sampleMod-th of THOSE: doc_id ≡ 4 (mod 5·sampleMod) — a plain
     // `% sampleMod == 0` would contradict the mod-5 residue and select
@@ -1286,68 +746,11 @@ object ScaleStress {
     val secs = opSec.map { case (k, v) => f""""$k":$v%.2f""" }
       .mkString("{", ",", "}")
     println(f"""{"stress":"neardup_recall","op_sec":$secs,"replicas":$replicas,"sample_mod":$sampleMod,"sampled_incoming":$n,"full_dups":$nFullDup,"cutfull_dups":$nCutDup,"banded_recall_vs_full":${rec(bh, bm)}%.4f,"banded_extra_vs_full":$bx,"index_recall_vs_full":${rec(ih, im)}%.4f,"index_extra_vs_full":$ix,"banded_recall_vs_cutfull":${rec(cbh, cbm)}%.4f,"banded_extra_vs_cutfull":$cbx,"banded_miss_vs_cutfull":$cbm,"index_recall_vs_cutfull":${rec(cih, cim)}%.4f,"index_extra_vs_cutfull":$cix,"index_miss_vs_cutfull":$cim,"banded16_recall_vs_cutfull":${rec(c16h, c16m)}%.4f,"banded16_extra_vs_cutfull":$c16x,"banded16_miss_vs_cutfull":$c16m}""")
-    spark.stop()
   }
 
-  /** Diagnostic: bucket-occupancy histogram of the BACKFILL shard's
-    * band rows after the frozen build cut — where does the within-shard
-    * self-join's collision mass come from?
-    * `sbt "runMain graft.ScaleStress nearduphist [replicas]"` */
-  private def nearDupHistProbe(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-      .select("doc_id", "text")
-    val idx = graft.Scratch.dir("graft_ndhist_")
-    NearDupIndex.writeNearDupIndex(docs, idx)
-    val shard = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r") + lit(1000000000L)).as("doc_id"),
-        concat(col("text"), lit(" replicatag"), col("r")).as("text"))
-    // replicate serve's shard band rows + frozen cut
-    graft.functions.GraftFunctions.register(spark)
-    val fps = graft.operators.TextOps.winnow(shard)
-      .select("doc_id", "fp").distinct()
-    val stop = spark.read.schema("fp long").parquet(s"$idx/stopfps")
-    val kept = fps.join(broadcast(stop), Seq("fp"), "left_anti")
-    val sigAggs = (0 until NearDupIndex.NumHashes).map(j =>
-      min(expr(graft.oracle.Parity.cwMix(j, "fp"))).as(s"h$j"))
-    val bvCols = (0 until NearDupIndex.Bands).map(b =>
-      expr(graft.operators.Dedup.bandValueSql(Seq(s"h$b"))))
-    val bands = kept.groupBy("doc_id")
-      .agg(sigAggs.head, sigAggs.tail: _*)
-      .select(col("doc_id"), posexplode(array(bvCols: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bv")
-    val stopBv = spark.read.schema("band int, bv long").parquet(s"$idx/stopbvs")
-    val cut = bands.join(broadcast(stopBv), Seq("band", "bv"), "left_anti")
-    val histo = cut.groupBy("band", "bv").agg(count(lit(1)).as("c"))
-      .selectExpr("cast(pow(2, floor(log2(c))) as bigint) as bucketsz")
-      .groupBy("bucketsz").agg(count(lit(1)).as("n_buckets"))
-      .orderBy("bucketsz").collect()
-    val mass = cut.groupBy("band", "bv").agg(count(lit(1)).as("c"))
-      .agg(sum(expr("(c * (c - 1)) div 2")).as("pairmass"),
-        sum("c").as("rows"), count(lit(1)).as("buckets")).head
-    println(s"""{"stress":"neardup_hist","replicas":$replicas,"frozen_bv":${stopBv.count()},"histo":${histo.map(r => s"[${r.getLong(0)},${r.getLong(1)}]").mkString("[", ",", "]")},"pair_mass":${mass.getLong(0)},"band_rows":${mass.getLong(1)},"buckets":${mass.getLong(2)}}""")
-    spark.stop()
-  }
-
-  /** `stream_neardup_crud` serve-cost ATTRIBUTION (verdict r13 #3):
-    * the CRUD gate seeds its index from 1/3 of the final corpus, so
-    * BOTH frozen cuts (fp stop + hot-bucket cap) freeze at 1/3-corpus
-    * occupancies and the 2/3 appended later can crowd buckets past
-    * [[NearDupIndex.BvCutAbs]] without the cap seeing them — the
-    * in-code growth-creep prediction. This leg isolates that effect
-    * from geometry/host noise: the SAME shard served against (A) a
-    * gate-shaped index (1/3 build + two appends + doomed deletes) and
-    * (B) a fresh build over the identical live corpus, same session,
-    * alternating 3 passes, min reported, full-plan statistic. Also
-    * reports each index's frozen-cut sizes and its live crowded-but-
-    * unfrozen bucket count (the new `capGrownBuckets` drift metric,
-    * computed the same way) — the mechanism, not just the delta.
-    * `sbt "runMain graft.ScaleStress neardupcrudab [replicas]"` */
-  /** Verdict r14 #3's closing A/B: the r14 `neardupcrudab` leg measured
-    * the seed-grown serve regime (2.4× slower than a fresh build; 240
+  /** Verdict r14 #3's closing A/B: the r14 `neardupcrudab` leg (since
+    * deleted; its table is STATUS.md §5) measured the seed-grown serve
+    * regime (2.4× slower than a fresh build; 240
     * crowded-but-unfrozen buckets) and PINNED it with "rebuild at ~2×
     * growth" as a documented-but-unenforced trigger. This leg runs the
     * verb that now enforces it: build the 1/3-seed growth sequence,
@@ -1357,25 +760,13 @@ object ScaleStress {
     * at the fresh-build level the A/B established (9.6 s vs 23.4 s at
     * 10×).
     * `sbt "runMain graft.ScaleStress rebuildproof [replicas]"` */
-  private def rebuildProofStress(args: Array[String]): Unit = {
+  private def rebuildProofStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 10
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs0 = graft.sources.Tables.read(spark, sfDir, "documents")
-      .select("doc_id", "text")
-    val docs = (if (replicas == 1) docs0
-      else docs0.select(col("doc_id"), col("text"),
-          explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-        .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-          when(col("r") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string")))
-            .as("text"))).localCheckpoint()
+    val docs = taggedReplicas(
+      graft.sources.Tables.read(spark, sfDir, "documents"), replicas).localCheckpoint()
     val hist = col("doc_id") % 5 < 4
     val doomed = col("doc_id") % 10 === 1
     val inc = docs.filter(col("doc_id") % 5 >= 4).localCheckpoint()
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // the gate's growth sequence: 1/3 seed build, two appends, deletes
     val idx = graft.Scratch.dir("ndrebuildproof_")
     NearDupIndex.writeNearDupIndex(
@@ -1389,91 +780,18 @@ object ScaleStress {
         .join(NearDupIndex.indexedIds(spark, idx), Seq("doc_id"), "left_semi"),
       idx)
     def serveSec(): Double =
-      timed { NearDupIndex.serveNearDup(spark, idx, inc)
-        .queryExecution.toRdd.count(): Unit }
+      timed(NearDupIndex.serveNearDup(spark, idx, inc).queryExecution.toRdd.count())._2
     serveSec() // JIT/readahead warm-up, untimed
     val grownPasses = (1 to 3).map(_ => serveSec())
     val sGrown = grownPasses.min
     val live = docs.filter(hist && !doomed)
-    var dec: NearDupIndex.RebuildDecision = null
-    val rebuildSec = timed {
-      dec = NearDupIndex.rebuildNearDupIndexIfDrifted(live, idx)
-    }
+    val (dec, rebuildSec) = timed(NearDupIndex.rebuildNearDupIndexIfDrifted(live, idx))
     serveSec() // fresh layout warm-up, untimed
     val postPasses = (1 to 3).map(_ => serveSec())
     val sPost = postPasses.min
     println(f"""{"stress":"rebuildproof","replicas":$replicas,"serve_grown_sec":$sGrown%.2f,"rebuilt":${dec.rebuilt},"cap_grown_max":${dec.capGrownBucketsMax},"boiler_max":${dec.newBoilerplateFracMax}%.4f,"rebuild_sec":$rebuildSec%.2f,"serve_postrebuild_sec":$sPost%.2f,"grown_over_post":${sGrown / sPost}%.2f,"passes_grown":[${grownPasses.map(p => f"$p%.2f").mkString(",")}],"passes_post":[${postPasses.map(p => f"$p%.2f").mkString(",")}]}""")
     assert(dec.rebuilt,
       s"the growth sequence must trip the default rebuild trigger: $dec")
-    spark.stop()
-  }
-
-  private def nearDupCrudAbStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 1
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs0 = graft.sources.Tables.read(spark, sfDir, "documents")
-      .select("doc_id", "text")
-    val docs = (if (replicas == 1) docs0
-      else docs0.select(col("doc_id"), col("text"),
-          explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-        .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-          when(col("r") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" replica"), col("r").cast("string")))
-            .as("text"))).localCheckpoint()
-    val hist = col("doc_id") % 5 < 4
-    val doomed = col("doc_id") % 10 === 1
-    val inc = docs.filter(col("doc_id") % 5 >= 4).localCheckpoint()
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // A: the gate's construction — 1/3 seed build, two appends, deletes
-    val idxA = graft.Scratch.dir("ndcrudab_seed_")
-    val tA = timed {
-      NearDupIndex.writeNearDupIndex(
-        docs.filter(hist && col("doc_id") % 3 === 0), idxA)
-      NearDupIndex.appendNearDupIndex(
-        docs.filter(hist && col("doc_id") % 3 === 1), idxA)
-      NearDupIndex.appendNearDupIndex(
-        docs.filter(hist && col("doc_id") % 3 === 2), idxA)
-      NearDupIndex.deleteFromNearDupIndex(
-        docs.filter(hist && doomed).select("doc_id")
-          .join(NearDupIndex.indexedIds(spark, idxA), Seq("doc_id"), "left_semi"),
-        idxA)
-    }
-    // B: a fresh build over the identical live corpus — both cuts
-    // frozen at full-corpus occupancy
-    val idxB = graft.Scratch.dir("ndcrudab_fresh_")
-    val tB = timed {
-      NearDupIndex.writeNearDupIndex(docs.filter(hist && !doomed), idxB)
-    }
-    // frozen-cut sizes + live crowded-but-unfrozen buckets per index
-    def cutStats(idx: String): (Long, Long) = {
-      val stopBv = spark.read.schema("band int, bv long").parquet(s"$idx/stopbvs")
-      val bands0 = spark.read.schema("doc_id long, band int, bv long")
-        .parquet(s"$idx/bands")
-      val tomb = s"$idx/tombstones"
-      val bands = if (graft.operators.IndexFs.exists(spark, tomb))
-        bands0.join(spark.read.schema("doc_id long").parquet(tomb),
-          Seq("doc_id"), "left_anti")
-      else bands0
-      val grown = bands.groupBy("band", "bv").agg(count(lit(1)).as("c"))
-        .filter(col("c") > NearDupIndex.BvCutAbs)
-        .join(broadcast(stopBv), Seq("band", "bv"), "left_anti")
-        .count()
-      (stopBv.count(), grown)
-    }
-    val (frozenA, grownA) = cutStats(idxA)
-    val (frozenB, grownB) = cutStats(idxB)
-    def serveSec(idx: String): Double =
-      timed { NearDupIndex.serveNearDup(spark, idx, inc)
-        .queryExecution.toRdd.count(): Unit }
-    serveSec(idxA); serveSec(idxB) // JIT/readahead warm-up, untimed
-    val passes = (1 to 3).map(_ => (serveSec(idxA), serveSec(idxB)))
-    val sA = passes.map(_._1).min
-    val sB = passes.map(_._2).min
-    println(f"""{"stress":"neardup_crud_ab","replicas":$replicas,"build_seed_sec":$tA%.2f,"build_fresh_sec":$tB%.2f,"serve_seedgrown_sec":$sA%.2f,"serve_fresh_sec":$sB%.2f,"serve_ratio":${sA / sB}%.2f,"frozen_bv_seed":$frozenA,"frozen_bv_fresh":$frozenB,"cap_grown_seed":$grownA,"cap_grown_fresh":$grownB,"passes_seed":[${passes.map(p => f"${p._1}%.2f").mkString(",")}],"passes_fresh":[${passes.map(p => f"${p._2}%.2f").mkString(",")}]}""")
-    spark.stop()
   }
 
   /** Backfill-regime near-dup serve: the standing index built over the
@@ -1487,10 +805,8 @@ object ScaleStress {
     * back `dup_history`/`dup_batch`, proving the fallback path answers,
     * not just survives.
     * `sbt "runMain graft.ScaleStress neardupserve [replicas]"` */
-  private def nearDupServeStress(args: Array[String]): Unit = {
+  private def nearDupServeStress(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
     val docs = graft.sources.Tables.read(spark, sfDir, "documents")
       .select("doc_id", "text")
     val nHist = docs.count()
@@ -1524,339 +840,5 @@ object ScaleStress {
       s"shard fp mass ${totFps * 8L} B vs threshold $thresh B — raise replicas")
     assert(dupFrac > 0.8,
       s"backfill serve must recognize replica near-copies: $out")
-    spark.stop()
-  }
-
-  /** Round-open corpus-sensitivity CANARY (verdict r14 #7): a ~1-minute
-    * cross-family leg run at round start on UNCHANGED operator code and
-    * committed as `BENCH_canary_r{N}.json` BEFORE any code change, so a
-    * driver-side testdata regeneration (the r14 headline break: same r13
-    * code, 12–27 s → 165–184 s backfill serve after the corpus turned
-    * dup-heavy) is separated from code effects by construction. Covers
-    * three distinct corpus-shape sensitivities: the standing-index
-    * backfill serve (LSH bucket occupancy), the batch banded dedup at 1×
-    * (df + mega-bucket cut mass) and exact-hash decontamination at 1×
-    * (duplicate-text join mass); also records a direct corpus
-    * fingerprint (exact-dup text fraction) so a shift is visible even
-    * before it moves a timing.
-    * `sbt "runMain graft.ScaleStress canary [serveReplicas]"` */
-  private def canaryStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 2
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-      .select("doc_id", "text")
-    val nDocs = docs.count()
-    val exactDupFrac =
-      1.0 - docs.select("text").distinct().count().toDouble / math.max(nDocs, 1L)
-    val idx = graft.Scratch.dir("graft_canary_")
-    var t0 = System.nanoTime()
-    NearDupIndex.writeNearDupIndex(docs, idx)
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    // the backfill shard: near-copies with fresh ids (the r14 break regime)
-    val shard = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r") + lit(1000000000L)).as("doc_id"),
-        concat(col("text"), lit(" replicatag"), col("r")).as("text"))
-    t0 = System.nanoTime()
-    val served = NearDupIndex.serveNearDup(spark, idx, shard)
-      .groupBy("status").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val serveSec = (System.nanoTime() - t0) / 1e9
-    val dupFrac = (served.getOrElse("dup_history", 0L) +
-      served.getOrElse("dup_batch", 0L)).toDouble /
-      math.max(served.values.sum, 1L)
-    def timeQuery(q: String): Double = {
-      val t = System.nanoTime()
-      Bench.evalRows(SparkEntry.queries(q)(spark, sfDir))
-      (System.nanoTime() - t) / 1e9
-    }
-    val bandedSec = timeQuery("dedup_incremental_winnow_banded")
-    val decontamSec = timeQuery("decontaminate")
-    println(f"""{"stress":"canary","docs":$nDocs,"exact_dup_frac":$exactDupFrac%.4f,"serve_replicas":$replicas,"build_sec":$buildSec%.2f,"serve_sec":$serveSec%.2f,"serve_dup_frac":$dupFrac%.4f,"banded_sec":$bandedSec%.2f,"decontam_sec":$decontamSec%.2f}""")
-    spark.stop()
-  }
-
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def dedupStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val base = docs.count()
-    // replica r of doc d: same text with r extra tagged tokens appended —
-    // high-Jaccard near-dups of the original, never byte-identical
-    val blown = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        when(col("r") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" replica"),
-            col("r").cast("string"))).as("text"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val pairs = Dedup.minHashPairs(blown, numHashes = 16, bands = 4, threshold = 0.5).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"dedup_minhash","replicas":$replicas,"docs":$n,"base_docs":$base,"pairs":$pairs,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Duplicated-span stress — deliberately ADVERSARIAL: replicating every
-    * document M× makes almost every gram cross-doc duplicated, so the
-    * "only duplicated fingerprints join back" small-side argument is at
-    * its worst (the survivor set ≈ the full gram universe). The run
-    * shows the op degrades to a plain shuffle join and still completes —
-    * AQE just stops broadcasting the survivor side.
-    *
-    * `sbt "runMain graft.ScaleStress spans [replicas]"` */
-  private def spansStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"), col("text"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val res = Dedup.dupSpans(blown)
-    val rows = res.count()
-    val allDup = res.filter(col("n_dup") === col("n_grams")).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"dedup_spans","replicas":$replicas,"docs":$n,"out_rows":$rows,"all_dup_docs":$allDup,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** BPE stress: replicate the corpus M× (fresh doc_ids, SAME texts) and
-    * train. The claim under test is the distributed-BPE scale shape —
-    * after the one corpus pass that builds the frequency-weighted word
-    * vocab, every merge round runs on the (unchanged) vocabulary — so
-    * wall-clock should grow far sublinearly in M: only the initial word
-    * count touches the blown-up corpus. */
-  private def bpeStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val rounds = if (args.length > 1) args(1).toInt else 8
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"), col("text"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val res = graft.operators.Bpe.train(blown, rounds)
-    val rows = res.count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"bpe_train","replicas":$replicas,"rounds":$rounds,"docs":$n,"merges":$rows,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** PQ stress: replicate the corpus M× (fresh vec_ids that keep the
-    * query set fixed — new ids are ≡ 1 mod queryEvery) and run encode +
-    * ADC. Claim under test: per-vector cost is constant — encode is one
-    * kernel pass, ADC adds m lookups per (query, vector) with no corpus
-    * shuffle before the k-pruned survivors — so throughput (vec/s) holds
-    * or improves as the corpus grows. */
-  private def pqStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
-    val n0 = emb.count()
-    val blown = emb.select(col("vec_id"), col("embedding"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("vec_id") * replicas + col("r")).as("vec_id"), col("embedding"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val rows = graft.operators.Pq.adcTopK(blown, k = 10, queryEvery = 50 * replicas).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"ann_pq","replicas":$replicas,"vecs":$n,"out_rows":$rows,"sec":$sec%.2f,"vecs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Stored-IVF-PQ stress — the index-as-a-system claim: build the
-    * cell-partitioned index ONCE per scale, then serve a FIXED query
-    * set from the stored layout, growing the corpus on the realistic
-    * IVF axis — NEW CELLS (fresh labels per replica; a deployment grows
-    * its coarse quantizer with the corpus), so per-cell size stays
-    * constant and each query still scans only its nprobe constant-sized
-    * probed slices. Claim under test: query-phase wall-clock holds
-    * ~flat while the corpus multiplies (the residual growth is the
-    * query-extraction filter pass and the centroid broadcast — narrow,
-    * model-shaped work), while the per-query REBUILD path
-    * ([[graft.operators.Pq.ivfAdcTopK]]) re-pays centroids + a full
-    * corpus encode every time. Reported per scale: build_sec (amortized
-    * once per index life), stored_query_sec, rebuild_sec.
-    * `sbt "runMain graft.ScaleStress pqstored [replicas]"` */
-  private def pqStoredStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
-    def blow(r: Int) = emb
-      .select(col("vec_id"), col("embedding"), col("label"),
-        explode(expr(s"sequence(0, ${r - 1})")).as("rr"))
-      .select((col("vec_id") * r + col("rr")).as("vec_id"), col("embedding"),
-        (col("label").cast("long") * r + col("rr")).as("label"))
-    Seq(1, replicas).foreach { r =>
-      val b = blow(r).localCheckpoint()
-      val n = b.count()
-      val idx = graft.Scratch.dir("graft_pqstored_")
-      val tb0 = System.nanoTime()
-      graft.operators.Pq.writeIvfPqIndex(b, idx)
-      val buildSec = (System.nanoTime() - tb0) / 1e9
-      val tq0 = System.nanoTime()
-      val rows = graft.operators.Pq.ivfAdcTopKStored(b, idx,
-        queryEvery = 50 * r).count()
-      val querySec = (System.nanoTime() - tq0) / 1e9
-      val tr0 = System.nanoTime()
-      graft.operators.Pq.ivfAdcTopK(b, queryEvery = 50 * r).count()
-      val rebuildSec = (System.nanoTime() - tr0) / 1e9
-      val cells = b.select("label").distinct().count()
-      println(f"""{"stress":"pq_stored","replicas":$r,"vecs":$n,"cells":$cells,"out_rows":$rows,"build_sec":$buildSec%.2f,"stored_query_sec":$querySec%.2f,"rebuild_sec":$rebuildSec%.2f}""")
-      b.unpersist(blocking = true)
-    }
-    spark.stop()
-  }
-
-  /** Lloyd-training stress: replicate embeddings M× and time
-    * [[graft.operators.Pq.trainCodebook]] alone — each iteration is one
-    * treeAggregate kernel pass emitting a model-sized partial per
-    * partition, so per-vector throughput should hold ~flat as the corpus
-    * grows (the init sample stays capped by construction).
-    * `sbt "runMain graft.ScaleStress pqtrain [replicas]"` */
-  private def pqTrainStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val emb = graft.sources.Tables.read(spark, sfDir, "embeddings")
-    val blown = emb.select(col("vec_id"), col("embedding"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("vec_id") * replicas + col("r")).as("vec_id"), col("embedding"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val cb = graft.operators.Pq.trainCodebook(blown)
-    val sec = (System.nanoTime() - t0) / 1e9
-    val nCw = cb.map(_.length).sum
-    println(f"""{"stress":"pq_train","replicas":$replicas,"vecs":$n,"codewords":$nCw,"sec":$sec%.2f,"vecs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Events-window stress: replicate the event stream M× with FRESH
-    * user_ids (per-user history length stays constant — the realistic
-    * growth axis: more users, not longer histories) and run the EWMA lag
-    * chain. Claim under test: per-user window partitions are constant-
-    * sized, the 8 lags share one shuffle+sort, so throughput (events/s)
-    * holds or improves as users multiply. */
-  private def eventsStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val events = graft.sources.Tables.read(spark, sfDir, "events")
-    val blown = events.select(col("event_id"), col("ts"), col("value"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"),
-        col("user_id"))
-      .select((col("user_id") * replicas + col("r")).as("user_id"),
-        (col("event_id") * replicas + col("r")).as("event_id"),
-        col("ts"), col("value"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val rows = graft.operators.EventOps.ewma(blown).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"q_ewma","replicas":$replicas,"events":$n,"out_rows":$rows,"sec":$sec%.2f,"events_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** LR-training stress: replicate the corpus M× (fresh doc_ids) and run
-    * the 3-iteration full-batch GD. Claim under test: per-iteration cost
-    * is one pass over the sparse feature stream plus bucket-sized
-    * aggregates, so docs/s holds or improves as the corpus grows (the
-    * weight vector and gradients stay 256 rows at any scale). */
-  private def lrStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val docs = graft.sources.Tables.read(spark, sfDir, "documents")
-    val blown = docs.select(col("doc_id"), col("text"), col("lang"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select((col("doc_id") * replicas + col("r")).as("doc_id"),
-        col("text"), col("lang"))
-    val n = blown.count()
-    val t0 = System.nanoTime()
-    val rows = graft.operators.Classifier.lrTrain(blown).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"stress":"lr_train","replicas":$replicas,"docs":$n,"weights":$rows,"sec":$sec%.2f,"docs_per_sec":${(n / sec).toLong}}""")
-    spark.stop()
-  }
-
-  /** Skew-join stress: an adversarial join where `hotPct`% of the fact
-    * rows collapse onto ONE key (the boilerplate-URL / null-key shape
-    * every real corpus has), joined against a replicated dimension, run
-    * with AQE skew-join handling ON and OFF (knobs sized to the data).
-    *
-    * MEASURED FINDING (the honest one): on local[32] the split does NOT
-    * pay — ON ≈ OFF ±10% at 8×/50% and 32×/90% — because local-mode
-    * shuffle reads are memory-speed and every core shares one memory
-    * domain, so the "straggler" hot task is not network-bound and the
-    * split's dim-side duplication costs as much as it saves. The plan
-    * does split (OptimizeSkewedJoin fires once the threshold is sized),
-    * which is what a network-bound 1000-executor cluster needs; this is
-    * the same local-mode-understates-shuffle caveat as the rank-plan
-    * shoot-out. The engine's join-skew story stays AQE-with-sized-knobs;
-    * hand-salting remains for aggregations ([[SkewAgg.salted]]). */
-  private def skewStress(args: Array[String]): Unit = {
-    val replicas = if (args.nonEmpty) args(0).toInt else 8
-    val hotPct = if (args.length > 1) args(1).toInt else 50
-    val spark = session()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val li = graft.sources.Tables.read(spark, sfDir, "lineitem")
-    val fact = li.select(col("l_orderkey"), col("l_extendedprice"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      // hotPct% of rows land on key 0, the rest keep distinct keys
-      .select(expr(s"case when l_orderkey % 100 < $hotPct then cast(0 as bigint) " +
-        "else l_orderkey * 100 + r end").as("k"),
-        col("l_extendedprice"))
-    val dim = li.select(col("l_orderkey"),
-        explode(expr(s"sequence(0, ${replicas - 1})")).as("r"))
-      .select(expr(s"case when l_orderkey % 100 < $hotPct then cast(0 as bigint) " +
-        "else l_orderkey * 100 + r end").as("k"))
-      .distinct()
-    val n = fact.count()
-    def run(skewOn: Boolean): Double = {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      // size the AQE skew knobs to the data (defaults assume 256 MB+
-      // partitions; this corpus's hot partition is tens of MB) — the
-      // same sizing decision a cluster deploy makes against its shuffle
-      // partition volume
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      // keep the join a real shuffle join: the dim side is fact-scale
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val t0 = System.nanoTime()
-      fact.join(dim, "k").agg(sum("l_extendedprice")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    run(skewOn = true) // warm-up: JIT + codegen, not measured
-    val on = run(skewOn = true)
-    val off = run(skewOn = false)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    println(f"""{"stress":"skew_join","replicas":$replicas,"hot_pct":$hotPct,"rows":$n,"aqe_skew_on_sec":$on%.2f,"aqe_skew_off_sec":$off%.2f,"speedup":${off / on}%.2f}""")
-    spark.stop()
   }
 }

@@ -1,21 +1,13 @@
 package graft
 
 import graft.operators.Pipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev smoke runner: drives the flagship `entry` and the checkpoint
   * reuse gate outside the driver harness. `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val e = SparkEntry.entry(spark)
     println("ENTRY_SCHEMA=" + e.schema.simpleString)

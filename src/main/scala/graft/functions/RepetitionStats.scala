@@ -75,10 +75,17 @@ object RepetitionStats {
     if (s == null) Empty else s
   }
 
+  /** Initial hash capacity for `n` entries: 2n, clamped to [16, 2^30]
+    * (the java.util.HashMap maximum). Computed in Long: the Int `n * 2`
+    * wraps negative past 2^30 tokens and the presize silently fell back
+    * to 16. */
+  private[graft] def capacityFor(n: Int): Int =
+    math.min(math.max(16L, 2L * n), 1L << 30).toInt
+
   def stats(toks: ArrayData): InternalRow = {
     val n = toks.numElements()
     // max multiplicity via one hash-count pass
-    val mult = new java.util.HashMap[UTF8String, Long](Math.max(16, n * 2))
+    val mult = new java.util.HashMap[UTF8String, Long](capacityFor(n))
     var top = 0L
     var i = 0
     while (i < n) {
@@ -89,7 +96,7 @@ object RepetitionStats {
     }
     def gramCounts(k: Int): (Long, Long) = {
       val g = Math.max(n - (k - 1), 1)
-      val seen = new java.util.HashSet[UTF8String](Math.max(16, g * 2))
+      val seen = new java.util.HashSet[UTF8String](capacityFor(g))
       var d = 0L
       var j = 0
       while (j < g) {

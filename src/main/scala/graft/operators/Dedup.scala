@@ -1275,6 +1275,12 @@ object Dedup {
                         thrNum: Int = 1, thrDen: Int = 2): DataFrame =
     incrementalWinnowFrom(docs, minShared, thrNum, thrDen, (pref, _) => pref)
 
+  /** `ceil(n · num / den)` as exact BIGINT arithmetic for a BIGINT column
+    * `n`: a double quotient rounds once n · num passes 2^53, and the probe
+    * prefix built from it would then be one fp short or long. */
+  private[graft] def ceilFracSql(n: String, num: Int, den: Int): String =
+    s"($n * $num + ${den - 1}) div $den"
+
   /** The verdict engine behind [[incrementalWinnow]] and
     * [[incrementalWinnowBloom]] — r16 respelling of the full-probe pair
     * path (guide §2.3/§3.2). The old spelling joined EVERY incoming fp
@@ -1339,7 +1345,7 @@ object Dedup {
       .withColumn("rk", row_number().over(wd))
       .withColumn("n_fp", count(lit(1)).over(Window.partitionBy("doc_id")))
       .withColumn("t", greatest(lit(minShared.toLong),
-        expr(s"cast(ceil(n_fp * $thrNum / $thrDen) as bigint)")))
+        expr(ceilFracSql("n_fp", thrNum, thrDen))))
       .filter(col("rk") <= col("n_fp") - col("t") + 1)
       .select("doc_id", "fp")
       .localCheckpoint() // feeds both probes

@@ -2197,6 +2197,26 @@ class OperatorsSpec extends SparkSpec {
     assert(parts(compact) == 4, s"expected 4 compacted files, got ${parts(compact)}")
     assert(spark.read.parquet(compact).count() == src.count())
   }
+
+  test("winnow probe threshold: exact integer ceil where a double quotient rounds") {
+    // 2^53 + 1 has no double: n / 2 read as a double rounds down to 2^52
+    // and its ceil is one short of the exact 2^52 + 1
+    val big = (1L << 53) + 1
+    for ((num, den) <- Seq((1, 2), (3, 4), (2, 3)); n <- Seq(1L, 2L, 3L, 7L, 100L, big, big + 2)) {
+      val exact = ((BigInt(n) * num + den - 1) / den).toLong
+      val got = spark.range(1).selectExpr(s"cast($n as bigint) as n_fp")
+        .selectExpr(Dedup.ceilFracSql("n_fp", num, den)).head().getLong(0)
+      assert(got == exact, s"ceil($n * $num / $den): got $got, want $exact")
+    }
+  }
+
+  test("repetition stats presize: 2n clamped to the HashMap range, never wrapped") {
+    import graft.functions.RepetitionStats.capacityFor
+    assert(capacityFor(0) == 16 && capacityFor(8) == 16 && capacityFor(1000) == 2000)
+    assert(capacityFor(1 << 29) == (1 << 30))
+    for (n <- Seq((1 << 30) - 1, 1 << 30, (1 << 30) + 1, Int.MaxValue))
+      assert(capacityFor(n) == (1 << 30), s"n = $n")
+  }
 }
 
 object TestOpsHelper {
