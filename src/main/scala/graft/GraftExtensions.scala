@@ -2,23 +2,16 @@ package graft
 
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point — lets any session pick up the
-  * library's custom codegen expressions via
-  * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`); shares the one function table
-  * with the per-session [[GraftFunctions.register]] path. No custom
+/** Gives a session the library's custom codegen expressions
+  * ([[GraftFunctions.all]]) when it is built. [[LocalSession]] and the
+  * test session build with `.withExtensions(new GraftExtensions)`; a
+  * cluster sets `spark.sql.extensions=graft.GraftExtensions`. No
   * analyzer/optimizer rules or strategies are injected: SURVEY.md §4 —
   * every plan shape the engine needs is native (scan → shuffle → window →
   * agg → broadcast-join → window → sink).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
-    GraftFunctions.all.foreach { case (name, usage, builder) =>
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, name, usage),
-        builder))
-    }
+    GraftFunctions.entries.foreach(e.injectFunction)
 }

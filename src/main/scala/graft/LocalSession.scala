@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session factory every main builds through (Bench, Verify,
   * Smoke, Explain, ScaleStress, Profile): local mode with one task slot
-  * per CPU, shuffle partitions = slots, ANSI off, UTC, UI off.
+  * per CPU, shuffle partitions = slots, ANSI off, UTC, UI off, and the
+  * custom functions from [[GraftExtensions]].
   *
   * Slots come from `SPARK_GRAFT_CPUS`; unset, from the cores the JVM
   * sees, so no main assumes the host's size. */
@@ -32,6 +33,7 @@ object LocalSession {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -242,11 +242,9 @@ object QueriesLlm {
     // the realized-overlap-proportional family)
     "dedup_winnow_banded" -> ((s, dir) =>
       TextOps.winnowOverlapBanded(Tables.read(s, dir, "documents"))),
-    "doc_rolling_hash" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+    "doc_rolling_hash" -> ((s, dir) =>
       Tables.read(s, dir, "documents")
-        .selectExpr("doc_id", "rolling_hash(trim(text)) as rh")
-    }),
+        .selectExpr("doc_id", "rolling_hash(trim(text)) as rh")),
     // stopword-profile language ID (deterministic argmax)
     "lang_id" -> ((s, dir) =>
       TextOps.langId(Tables.read(s, dir, "documents"))
@@ -1092,13 +1090,11 @@ object QueriesLlm {
     // reproducible train/val/test assignment by id hash — the split every
     // training pipeline needs to be STABLE across runs and engines: no
     // rand(), no row order dependence, pure per-row arithmetic
-    "sample_split" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
+    "sample_split" -> ((s, dir) =>
       Tables.read(s, dir, "documents").selectExpr(
           "doc_id", "lang",
           s"${Parity.cwMix(21, "rolling_hash(cast(doc_id as string))")} as h")
-        .withColumn("split", expr(splitCase))
-    }),
+        .withColumn("split", expr(splitCase))),
     // end-to-end curation: one pass scores quality + language, the exact-
     // dedup keeper set marks duplicates, and every doc gets a keep/drop
     // verdict with its first failing reason — the composed filter chain

@@ -70,11 +70,16 @@ object RollingHash {
   }
 }
 
-/** The library's custom-expression function table — single source for
-  * both registration paths (per-session registry here; cluster-wide via
-  * [[graft.GraftExtensions]]). */
+/** The library's custom-expression function table. A session gets it
+  * when it is built, through [[graft.GraftExtensions]]: every
+  * [[graft.LocalSession]] and the test session do, and a cluster does
+  * with `spark.sql.extensions=graft.GraftExtensions`. The two MWU
+  * operators whose plans call one of these functions
+  * (`Ranking.prefixRank`, `MwuStats.withP`) also [[ensure]] it, so
+  * `graft.api.MwuApi` runs on a session built without the extension. */
 object GraftFunctions {
-  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
   val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("rolling_hash", "polynomial rolling hash of a string",
@@ -98,9 +103,21 @@ object GraftFunctions {
     ("double_sort_bucket", "deterministic bucket id monotone in double ordering",
       exprs => DoubleSortBucket(exprs.head)))
 
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
+  /** `all` in the form `SparkSessionExtensions.injectFunction` and the
+    * function registry take. */
+  private[graft] val entries: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    all.map { case (name, usage, builder) =>
+      (FunctionIdentifier(name),
+        new ExpressionInfo(classOf[graft.GraftExtensions].getName, name, usage), builder)
     }
+
+  /** Registers the functions `spark`'s registry lacks. A function the
+    * session already holds is left as it is, so a session built with the
+    * extension is never touched. */
+  def ensure(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    entries.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+  }
 }

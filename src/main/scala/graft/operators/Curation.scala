@@ -87,8 +87,6 @@ object Curation {
                nShards: Int = 8, binBudget: Int = 256,
                nearDup: Boolean = false,
                nearDupPairs: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-
     // stage 1 (row-local): quality + language-consistency filter.
     // n_chars (the raw column, not the recomputed n_chars_m) rides
     // along because the near-dup stage bands on it — the standalone

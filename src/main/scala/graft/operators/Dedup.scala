@@ -36,8 +36,6 @@ object Dedup {
     * but array intersection runs on longs instead of hashed strings —
     * several× cheaper at scale — and the encoding is expressible
     * identically in DuckDB for the oracle. */
-  def charShingleCodes(textCol: String): Column = expr(charShingleCodesSql(textCol))
-
   def charShingleCodesSql(textCol: String): String =
     s"array_distinct(transform(sequence(1, greatest(char_length($textCol) - 2, 1)), " +
       s"i -> ascii(substring($textCol, i, 1)) * 4398046511104 " +
@@ -55,28 +53,22 @@ object Dedup {
     s"array_distinct(transform(sequence(1, greatest(size(split(trim($textCol), ' ')) - ${n - 1}, 1)), " +
       s"i -> concat_ws(' ', slice(split(trim($textCol), ' '), i, $n))))"
 
-  /** Sorted distinct rolling-hash codes of the word-3-gram shingles — the
-    * integer shingle-set representation every hash-family op runs on
-    * (merge-intersect ready; codes ∈ [0, CwMod) so Carter-Wegman mixes
-    * stay overflow-free in both engines). Single-expression form — see
-    * [[withShingleCodes]] for the fast two-projection shape. */
-  def shingleCodesSql(textCol: String): String =
-    s"array_sort(array_distinct(transform(${wordShinglesSql(textCol)}, s -> rolling_hash(s))))"
-
-  /** (doc_id, codes) with the words array materialized in a LOWER
-    * projection: inlining `split` into the shingle lambda re-splits the
-    * text once per shingle — O(words²) per document, measured 3× slower
-    * at sf0.1. CollapseProject keeps the two projections separate because
-    * `words` is non-cheap and referenced twice. */
-  def withShingleCodes(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  /** (doc_id, codes): the sorted distinct rolling-hash codes of each
+    * document's word-3-gram shingles — the integer shingle-set
+    * representation every hash-family op runs on (merge-intersect ready;
+    * codes ∈ [0, CwMod) so Carter-Wegman mixes stay overflow-free in both
+    * engines). The words array is materialized in a LOWER projection:
+    * inlining `split` into the shingle lambda re-splits the text once per
+    * shingle — O(words²) per document, measured 3× slower at sf0.1.
+    * CollapseProject keeps the two projections separate because `words`
+    * is non-cheap and referenced twice. */
+  def withShingleCodes(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs.select(col("doc_id"), expr(s"split(trim($textCol), ' ')").as("words"))
       .select(col("doc_id"), expr(
         "array_sort(array_distinct(transform(transform(" +
           "sequence(1, greatest(size(words) - 2, 1)), " +
           "i -> concat_ws(' ', slice(words, i, 3))), " +
           "s -> rolling_hash(s))))").as("codes"))
-  }
 
   /** Near-duplicate pairs by character-n-gram Jaccard within
     * (lang, length-band) candidate buckets. Jaccard is an exact integer
@@ -103,7 +95,6 @@ object Dedup {
                    threshold: Double = 0.4): DataFrame = {
     require(n == 3, "char_trigram_codes packs exactly 3 code points; " +
       "other n would need a wider packing")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = docs.select(col("doc_id"), col("lang"),
         lenBucketExpr(docs, band).as("bucket"),
         expr("char_trigram_codes(text)").as("sh"))
@@ -169,7 +160,6 @@ object Dedup {
                          threshold: Double = 0.4,
                          numHashes: Int = 16, bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val r = numHashes / bands
     val mod = graft.oracle.Parity.CwMod
     // one projection chain, zero shuffles until the band join: trigram
@@ -358,7 +348,6 @@ object Dedup {
   def minHashPairs(docs: DataFrame, numHashes: Int = LshNumHashes, bands: Int = LshBands,
                    threshold: Double = LshThreshold, gatherCap: Int = 4096): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val r = numHashes / bands
     // codes materialize ONCE in this projection (CollapseProject keeps
     // the expensive array out of the 16 signature transforms), and ride
@@ -463,7 +452,6 @@ object Dedup {
     * never shuffles. Exact integer ratios → full oracle hash check. */
   def decontaminate(docs: DataFrame, evalEvery: Int = 97,
                     maxEvalId: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = withShingleCodes(docs, "text")
     // benchmark-contamination semantics at scale: a real eval set is a
     // FIXED benchmark, not a corpus fraction — `maxEvalId` caps the
@@ -619,7 +607,6 @@ object Dedup {
   def lshEval(docs: DataFrame, sampleK: Int = 192, numHashes: Int = LshNumHashes,
               bands: Int = LshBands, threshold: Double = LshThreshold): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val r = numHashes / bands
     val hk = graft.oracle.Parity.cwMix(5, "rolling_hash(cast(doc_id as string))")
     val withH = docs.selectExpr("doc_id", "text", s"$hk as hk")
@@ -854,7 +841,6 @@ object Dedup {
     * a silent default here. */
   def decontaminateJoin(docs: DataFrame, evalEvery: Int = 97,
                         maxEvalId: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = withShingleCodes(docs, "text")
     // maxEvalId: fixed-benchmark eval membership (see [[decontaminate]])
     val isEval = col("doc_id") % evalEvery === 0 && col("doc_id") < maxEvalId
@@ -907,7 +893,6 @@ object Dedup {
     * positives and all) is deterministic and the estimate oracle-checks. */
   def decontaminateBloom(docs: DataFrame, evalEvery: Int = 97,
                          mBits: Int = 65536, kHash: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = withShingleCodes(docs, "text")
     val bloom = sh.filter(col("doc_id") % evalEvery === 0)
       .select(explode(col("codes")).as("code"))
@@ -988,7 +973,6 @@ object Dedup {
     * (DuckDB assembles the same bits into four 16-bit blocks instead of
     * one 64-bit word — its BIGINT shift throws on 1<<63). */
   def simHash(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = docs.select(col("doc_id"),
       explode(expr(s"split(trim($textCol), ' ')")).as("t"))
       .withColumn("h", expr("rolling_hash(t)"))
@@ -1216,7 +1200,6 @@ object Dedup {
     * |true dups| + |false positives|. */
   def incrementalBloom(docs: DataFrame, mBits: Int = 65536,
                        kHash: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("fp")
     val hist = docs.filter(expr("doc_id % 5 < 4"))
       .select(md5(col("text")).as("fp")).distinct()
@@ -1324,7 +1307,6 @@ object Dedup {
   private def incrementalWinnowFrom(docs: DataFrame, minShared: Int,
       thrNum: Int, thrDen: Int,
       screenHistProbe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val fps = TextOps.winnow(docs).select("doc_id", "fp").distinct().localCheckpoint()
     val hist = fps.filter(expr("doc_id % 5 < 4"))
@@ -1523,7 +1505,6 @@ object Dedup {
                               numHashes: Int = 16, bands: Int = 16,
                               bvCutAbs: Int = NearDupIndex.BvCutAbs): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val r = numHashes / bands
     val fps = TextOps.winnow(docs).select("doc_id", "fp").distinct().localCheckpoint()
     // bounded driver count — the measured winnowOverlap trade

@@ -71,7 +71,6 @@ object Hll {
     * comparable in the results): emits the exact distinct count, the
     * number of untouched registers, and the two-regime HLL estimate. */
   def hllDistinct(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val dt = docs.select(col("lang"), expr("split(trim(text), ' ')").as("words"))
       .select(col("lang"), explode(expr(
         "array_distinct(transform(sequence(1, greatest(size(words) - 2, 1)), " +
@@ -160,7 +159,6 @@ object Hll {
     * sketch DIRECTLY from the token universe, so hash equality is the
     * merge-identity proof: max-of-maxes == max, estimate included. */
   def hllMerged(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val dt = docs.select(col("source"), expr("split(trim(text), ' ')").as("words"))
       .select(col("source"), explode(expr(
         "array_distinct(transform(sequence(1, greatest(size(words) - 2, 1)), " +

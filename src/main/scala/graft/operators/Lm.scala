@@ -136,7 +136,6 @@ object Lm {
     * partition-local prune + k-row global window. */
   def dsirSelect(docs: DataFrame): DataFrame = {
     import graft.oracle.Parity.{SparkD, cwMix}
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val trans = docs.selectExpr("doc_id", "lang", "split(trim(text), ' ') as ws")
       .filter(expr("size(ws) >= 2"))
       .withColumn("i", explode(expr("sequence(1, size(ws) - 1)")))
@@ -211,7 +210,6 @@ object Lm {
     * within each phase a reproducible shard + position + token-budget
     * bin. Output: (doc_id, phase, shard, pos, n_tokens, bin). */
   def curriculum(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val nt = docs.selectExpr("doc_id",
       "cast(size(split(trim(text), ' ')) as bigint) as n_tokens")
     val cur = perplexity(docs)

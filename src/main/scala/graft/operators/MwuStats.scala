@@ -71,7 +71,7 @@ object MwuStats {
     * treats NaN as greatest and would return the 1.0 clip arm, where the
     * reference's 2·norm.sf(NaN) = NaN (pvals.py:119). */
   def withP(zStats: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(zStats.sparkSession)
+    graft.functions.GraftFunctions.ensure(zStats.sparkSession)
     // ±inf z (all-tied feature, sigma=0) gets the limit values explicitly:
     // erfc(+inf)=0 → p=0, erfc(-inf)=2 → clip 1. CodyErfc's saturating
     // BIGINT floor already computes these, but the DuckDB snippet's double

@@ -569,7 +569,6 @@ object NearDupIndex {
                    minShared: Int = 3, thrNum: Int = 1,
                    thrDen: Int = 2,
                    broadcastShard: Option[Boolean] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     requireConf(spark, dir)
     refreshStored(spark, dir)
     val rows = docRows(shard, readStop(spark, dir)).localCheckpoint()

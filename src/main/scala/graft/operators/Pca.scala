@@ -208,18 +208,14 @@ object Pca {
   }
 
   /** Top-k PCA projection of every vector: (vec_id, p1..pk). */
-  def project(emb: DataFrame, k: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
+  def project(emb: DataFrame, k: Int = 2): DataFrame =
     projectOn(emb, components(momentsDataflow(emb), k))
-  }
 
   /** [[project]] with the moment pass on the [[momentsAgg]] scale path —
     * same results bit-for-bit (gated by `emb_pca_agg` hash-matching
     * `emb_pca`'s oracle). */
-  def projectAgg(emb: DataFrame, k: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
+  def projectAgg(emb: DataFrame, k: Int = 2): DataFrame =
     projectOn(emb, components(momentsAgg(emb), k))
-  }
 
   /** PCA WHITENING — the projection each component scaled by 1/√λ so
     * the output has unit variance per component (the standard
@@ -231,7 +227,6 @@ object Pca {
     * (λ ≤ 0 on variance-free data) pass through unscaled — mirrored in
     * the oracle's CASE. */
   def whiten(emb: DataFrame, k: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val es = eigh(momentsDataflow(emb), k)
     def lit64(v: Array[Double]) = s"array(${v.map(Parity.lit).mkString(", ")})"
     emb.select(col("vec_id") +: es.zipWithIndex.map { case ((v, lam), i) =>

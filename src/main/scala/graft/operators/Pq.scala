@@ -311,7 +311,6 @@ object Pq {
     * chain_dot; the monotone form is fine for an internal ranking (this
     * never meets the DuckDB oracle). */
   def exactL2TopK(emb: DataFrame, k: Int = 10, queryEvery: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val base = emb.filter(size(col("embedding")) === dim)
       .withColumn("n2", expr("chain_dot(embedding, embedding)"))
     val q = base.filter(col("vec_id") % queryEvery === 0)
@@ -386,7 +385,6 @@ object Pq {
     * survived the quantized screen. */
   private def rerankExact(emb: DataFrame, short: DataFrame, k: Int,
                           queryEvery: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val base = emb.filter(size(col("embedding")) === dim)
       .withColumn("n2", expr("chain_dot(embedding, embedding)"))
     val cand = base.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),

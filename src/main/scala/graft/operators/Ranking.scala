@@ -88,7 +88,7 @@ object Ranking {
       Seq("vb", "cum", "off", "fnan", "bt_f", "bt_b").map("__rank_" + _)
     val v = col("value")
     val keyed = if (split) {
-      graft.functions.GraftFunctions.register(rows.sparkSession)
+      graft.functions.GraftFunctions.ensure(rows.sparkSession)
       rows.withColumn(vb, expr("double_sort_bucket(value)"))
     } else rows
     val keys = if (split) Seq(col("feature_id"), col(vb)) else Seq(col("feature_id"))

@@ -66,7 +66,6 @@ object Sampling {
     * its own partition, so phase 1 never drops a final-answer row);
     * the per-lang sort then runs over ≤ partitions·k survivors. */
   def stratified(docs: DataFrame, k: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val hashed = docs.selectExpr("doc_id", "lang", s"$hSpark as h")
     val local = hashed
       .withColumn("pid", spark_partition_id())
@@ -105,7 +104,6 @@ object Sampling {
     * the (few-row) rate table back onto the corpus, one final count agg —
     * the corpus itself never shuffles. */
   def temperature(docs: DataFrame, frac: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
     val wsum = counts.agg(
       expr(Parity.fpSum("sqrt(cast(n_docs as double))")).as("wsum"),
@@ -142,7 +140,6 @@ object Sampling {
     * top-k row is top-k within its own partition, so the partition-local
     * prune is lossless. */
   def weighted(docs: DataFrame, k: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val hashed = docs.selectExpr("doc_id", "lang",
       "cast(n_chars + 1 as bigint) as w", s"${esKey(hSpark)} as key")
     val local = hashed
@@ -212,7 +209,6 @@ object Sampling {
     * the corpus never shuffles (the [[temperature]] shape with a token
     * budget instead of a √n target). */
   def mixPlan(docs: DataFrame, budgetTokens: Long = 100000L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = docs.selectExpr("doc_id", "lang",
       "cast(size(split(trim(text), ' ')) as bigint) as n_tok",
       s"${mixHash("rolling_hash(cast(doc_id as string))")} as u")

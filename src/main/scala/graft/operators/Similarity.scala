@@ -24,10 +24,8 @@ object Similarity {
   val dim = 64
 
   /** Adds a deterministic `norm` column. */
-  def withNorm(emb: DataFrame, d: Dialect = SparkD, vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
+  def withNorm(emb: DataFrame, d: Dialect = SparkD, vecCol: String = "embedding"): DataFrame =
     emb.withColumn("norm", expr(s"sqrt(${Parity.dot(d, vecCol, vecCol, dim)})"))
-  }
 
   /** Brute-force cosine top-k: for each query row (`queryPred` selects
     * them), the k nearest other vectors by cosine. */
@@ -112,7 +110,6 @@ object Similarity {
     * exact [[cosineTopK]] is asserted in the spec. */
   def ivfTopK(emb: DataFrame, k: Int = 10, queryEvery: Int = 50,
               nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.vector_to_array
     val spark = emb.sparkSession
@@ -252,7 +249,6 @@ object Similarity {
     * provably identical to a full rebuild. n_cells·dim rows — model-
     * sized at any corpus scale. */
   def cellStats(emb: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.select(col("label").cast("long").as("cl"),
         explode(expr(s"sequence(1, $dim)")).as("d"), col("embedding"))
       .withColumn("v", expr("cast(element_at(embedding, d) as double)"))
@@ -282,7 +278,6 @@ object Similarity {
   def probesFromCentroids(emb: DataFrame, centroids: DataFrame,
                           queryEvery: Int = 50, nprobe: Int = 3,
                           maxQ: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val cNorm = broadcast(centroids)
     val n = withNorm(emb).filter(col("norm") > 0.0)
     val q = n.filter(col("vec_id") % queryEvery === 0 && col("vec_id") < maxQ)
@@ -445,7 +440,6 @@ object Similarity {
     * operands and the dot is the strict left-chain — bit-exact without
     * quantization grids. */
   def sqAdcTopK(emb: DataFrame, k: Int = 10, queryEvery: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val codes = emb
       .withColumn("mx", expr("array_max(transform(embedding, x -> abs(cast(x as double))))"))
       .filter(col("mx") > 0.0)

@@ -142,7 +142,6 @@ object Stats {
     * pipeline's group-vs-rest contract, parametric edition). `x` is a
     * pre-scaled column expression (see the overflow contract above). */
   def welchT(df: DataFrame, grp: String, x: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val g = df.groupBy(col(grp).as("grp")).agg(
       count(lit(1)).as("n"),
       expr(fpSum(x)).as("s1"),
@@ -274,7 +273,6 @@ object Stats {
     * expression. */
   def bootstrap(df: DataFrame, grp: String, x: String, keySpark: String,
                 reps: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.selectExpr(s"$grp as grp",
         s"cast(floor(($x) * 1048576e0 + 5e-1) as bigint) as v_fp",
         s"${Parity.rollingHash(SparkD, keySpark)} as h")

@@ -161,7 +161,6 @@ object TextOps {
     * Selected sets are pinned bit-identical to [[winnowWindowed]] by
     * the differential spec. */
   def winnow(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), explode(expr("winnow_sel(trim(text))")).as("sel"))
       .select(col("doc_id"),
@@ -176,7 +175,6 @@ object TextOps {
     * pathological document into `chunkLen`-position window tasks with
     * w−1 frame-filler overlap, selecting exactly the unchunked set). */
   private[graft] def winnowWindowed(docs: DataFrame, chunkLen: Int = 1 << 16): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val grams = docs
       .select(col("doc_id"), expr("trim(text)").as("t"))
@@ -244,7 +242,6 @@ object TextOps {
     * one still scores 1.0); exact integer ratio, bit-deterministic. */
   def winnowOverlap(docs: DataFrame, minShared: Int = 3,
                     threshold: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val fps = winnow(docs).select("doc_id", "fp").distinct().localCheckpoint()
     // corpus size is a bounded driver aggregate (one count job); riding
@@ -406,7 +403,6 @@ object TextOps {
                           threshold: Double = 0.5,
                           numHashes: Int = 16, bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val r = numHashes / bands
     val fps = winnow(docs).select("doc_id", "fp").distinct().localCheckpoint()
     // bounded driver count — the measured winnowOverlap trade (riding
@@ -542,7 +538,6 @@ object TextOps {
     // so every double is bit-equal. The old projection stays as
     // [[repetitionHof]] (and remains the DuckDB oracle's source via
     // [[repetitionSelects]]), pinned by the differential spec.
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("lang"),
         expr("repetition_stats(split(trim(text), ' '))").as("rs"))
@@ -723,7 +718,6 @@ object TextOps {
   }
 
   def kmvDistinct(docs: DataFrame, k: Int = 256): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val mod = graft.oracle.Parity.CwMod
     // sketch the word-3-gram universe (thousands of distinct values per
     // language — the 31-token synthetic vocabulary itself never exceeds
@@ -782,7 +776,6 @@ object TextOps {
     * universe relation the sketch reads (materialized ONCE). */
   def kmvSetOps(docs: DataFrame, k: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val mod = graft.oracle.Parity.CwMod
     val dt = trigramUniverse(docs).localCheckpoint() // 3 consumers
     val sk = kmvMinima(dt, k).localCheckpoint()      // 4 consumers
@@ -923,7 +916,6 @@ object TextOps {
     * frequency with their CMS estimates. */
   def cmsHeavy(docs: DataFrame, depth: Int = 4, width: Int = 16, k: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = docs
       .select(explode(expr("split(trim(text), ' ')")).as("token"))
       .select(col("token"), expr("rolling_hash(token)").as("code"))
@@ -1020,7 +1012,6 @@ object TextOps {
     * contiguous-fill tradeoff. Exact integer arithmetic throughout. */
   def packBins(docs: DataFrame, budget: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = Window.partitionBy("lang").orderBy(col("h").asc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs.selectExpr("doc_id", "lang",
@@ -1271,7 +1262,6 @@ object TextOps {
     * hash equality is the proof. */
   private def verifyPairsDot(w: DataFrame, cand: DataFrame,
                              threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(w.sparkSession)
     // sort_array over (token, w) structs orders by token (distinct per
     // doc) in UTF8 binary order — the comparator SortedDotFp merges with
     val arrs = w.groupBy("doc_id")
@@ -1341,7 +1331,6 @@ object TextOps {
   def allPairsBanded(docs: DataFrame, threshold: Double = 0.6,
                      numHashes: Int = 16, bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val r = numHashes / bands
     val w = normalizedPostings(docs)
       .withColumn("th", expr("rolling_hash(token)")) // hash once, not ×16
@@ -1851,7 +1840,6 @@ object TextOps {
     * short-token codes across slots. One explode + one map-side-combined
     * aggregate — the only shuffle is (doc, bucket)-sized. */
   def hashFeatures(docs: DataFrame, buckets: Int = 256): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), explode(expr("split(trim(text), ' ')")).as("tok"))
       .select(col("doc_id"),

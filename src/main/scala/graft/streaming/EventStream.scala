@@ -1395,7 +1395,6 @@ object EventStream {
     * with the oracle. */
   def hllStream(stream: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    graft.functions.GraftFunctions.register(stream.sparkSession)
     val spark = stream.sparkSession
     import spark.implicits._
     val rh = "rolling_hash(cast(user_id as string))"

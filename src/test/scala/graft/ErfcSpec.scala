@@ -24,7 +24,6 @@ class ErfcSpec extends SparkSpec {
 
   test("cody_erfc codegen expression is bit-equal to the SQL snippet") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val xs = (-600 to 600).map(_ / 25.0) ++
       Seq(-26.5, -5.0, 0.46875, -0.46875, 4.0, 4.0001, -4.0001, 26.0, 0.0, -0.0)
     val diffs = xs.toDF("x")
@@ -37,7 +36,6 @@ class ErfcSpec extends SparkSpec {
 
   test("p-from-z snippet: symmetric clip behavior") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(0.0, -3.0, 3.0, Double.NegativeInfinity, Double.PositiveInfinity)
       .toDF("z").withColumn("p", expr(Parity.pFromZ(Parity.SparkD, "z")))
     val p = df.orderBy("z").collect().map(_.getDouble(1))

@@ -611,7 +611,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("chain_dot: strict length + null-element semantics (NULL, not a truncated dot)") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(
       (1L, Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (2L, Seq(1.0, 2.0), Seq(4.0, 5.0, 6.0))).toDF("id", "a", "b")
@@ -673,7 +672,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("char_trigram_codes equals the SQL formula on ASCII (where spark ascii = codepoint)") {
-    graft.functions.GraftFunctions.register(spark)
     val texts = Seq("hello world", "ab", "x", "the quick brown fox")
     val df = texts.toDF("text").selectExpr(
       "char_trigram_codes(text) as fast",
@@ -684,7 +682,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("char_trigram_codes on empty/1-char/2-char strings matches the SQL formula (no AIOOBE)") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq("", "a", "ab").toDF("text").selectExpr(
       "char_trigram_codes(text) as fast",
       "array_sort(" + graft.operators.Dedup.charShingleCodesSql("text") + ") as ref")
@@ -698,7 +695,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("char_trigram_codes uses Unicode code points (DuckDB ascii semantics, not spark's first-byte)") {
-    graft.functions.GraftFunctions.register(spark)
     // 日本語テキスト code points
     val cps = Seq(26085L, 26412L, 35486L, 12486L, 12461L, 12473L, 12488L)
     val exp = (0 to 4).map(i =>
@@ -709,7 +705,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count equals size(array_intersect)") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 9L, 11L))).toDF("a", "b")
       .selectExpr("sorted_intersect_count(a, b) as c",
         "cast(size(array_intersect(a, b)) as bigint) as r")
@@ -718,7 +713,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("rolling_hash custom expression: deterministic, codegen path") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((1L, "abc"), (2L, "abc"), (3L, "abd")).toDF("doc_id", "text")
       .selectExpr("doc_id", "rolling_hash(text) as rh")
     val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -956,7 +950,6 @@ class OperatorsSpec extends SparkSpec {
     // candidate×token explode + fpSum aggregate EXACTLY (same fixed-point
     // longs, same one division) — compared pre-threshold so near-miss
     // scores are pinned too, not only survivors
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.sources.Tables.read(spark, sf("sf0.001"), "documents")
     // (a) operator-level differential on the real corpus at a LOW
     // threshold (more survivors, more near-threshold scores): the merge
@@ -2075,7 +2068,6 @@ class OperatorsSpec extends SparkSpec {
     val sq = Similarity.sqAdcTopK(emb).collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     // exact ranking on the raw floats through the identical plan shape
-    graft.functions.GraftFunctions.register(spark)
     val d = emb.select($"vec_id",
       expr("transform(embedding, v -> cast(v as double))").as("deq"))
       .filter(expr("array_max(transform(deq, x -> abs(x))) > 0e0"))

@@ -83,7 +83,6 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("chain_dot is bit-equal to the explicit left-associated SQL chain") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val emb = Seq.tabulate(20)(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() * 2f - 1f),

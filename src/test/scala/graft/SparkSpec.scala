@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session; suites run in the
-  * forked test JVM). */
+  * forked test JVM). Built with [[GraftExtensions]], like every
+  * [[LocalSession]]. */
 object TestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -16,6 +17,7 @@ object TestSession {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_test_wh_").toString)
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
