@@ -224,9 +224,8 @@ object QueriesMwu {
     // No broadcast hint: orders is fact-proportional (~1/4 of lineitem
     // rows), not a dimension, so forcing a broadcast would OOM at scale.
     // AQE decides — it still broadcasts at small SF and shuffle-joins at
-    // 100 TB (PlanSpec asserts no forced hint survives to the plan; the
-    // MwuApi.rankGeneGroupsFromObs `broadcastObs` escape hatch remains
-    // for genuinely dimension-sized obs tables).
+    // 100 TB (PlanSpec asserts no forced hint survives to the plan).
+    // MwuApi.rankGeneGroupsFromObs leaves its obs join to the planner too.
     "mwu_orders" -> ((s, dir) => {
       val li = Tables.read(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"))

@@ -68,7 +68,9 @@ object MwuApi {
     * [[MarkerTable.writePerGroup]]. */
   def createDf(stats: DataFrame, lfc: DataFrame, vars: DataFrame,
                topN: Option[Int] = None, ascending: Boolean = false): DataFrame = {
-    Validation.requireVarsCover(stats.select("feature_id"), vars)
+    Validation.requireTopNPositive(topN)
+    Validation.require(Validation.varsCoverage(stats, vars),
+      Validation.varsCover +: Validation.topNWithin(topN): _*)
     val joined = stats.join(lfc, Seq("feature_id", "grp"))
       .join(broadcast(vars), Seq("feature_id"))
       .withColumn("abs_logfoldchange", abs(col("logfoldchange")))
@@ -87,16 +89,16 @@ object MwuApi {
   /** Canonical split-relation input (FIXTURES.md §1): fact
     * `cells(obs_id, feature_id, value)` + dimension `obs(obs_id, grp)`.
     * Validates the partition-of-groups invariant (reference
-    * _utils.py:47-51), joins the labels onto the fact (the obs table is
-    * n_obs-sized — broadcast when it fits, else a shuffle join on
-    * obs_id), and runs the pipeline. */
+    * _utils.py:47-51), the uniform feature shape and `topN`, joins the
+    * labels onto the fact (the planner picks a broadcast while obs fits,
+    * else a shuffle join on obs_id), and runs the pipeline. */
   def rankGeneGroupsFromObs(spark: SparkSession, cells: DataFrame, obs: DataFrame,
-                            cfg: Pipeline.Config = Pipeline.Config(),
-                            broadcastObs: Boolean = true): DataFrame = {
+                            cfg: Pipeline.Config = Pipeline.Config()): DataFrame = {
+    Validation.requireTopNPositive(cfg.topN)
     Validation.requirePartition(obs)
-    Validation.requireUniformFeatures(cells)
-    val dim = if (broadcastObs) broadcast(obs) else obs
-    val joined = cells.join(dim, "obs_id")
+    Validation.require(Validation.featureCounts(cells),
+      Validation.uniformFeatures +: Validation.topNWithin(cfg.topN): _*)
+    val joined = cells.join(obs, "obs_id")
       .select(col("grp"), col("feature_id"), col("value"))
     Pipeline.markerStats(spark, joined, cfg)
   }

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Sidecar filesystem operations for the stored indexes (tombstones,
   * bucket caches), through the Hadoop `FileSystem` API so the lifecycle
@@ -28,6 +29,24 @@ object IndexFs {
     val (fs, p) = fsFor(spark, path)
     fs.exists(p)
   }
+
+  /** The ids tombstoned in index `dir`, one `long` column `idCol`. */
+  private def tombstones(spark: SparkSession, dir: String, idCol: String): Option[DataFrame] =
+    Some(s"$dir/tombstones").filter(exists(spark, _))
+      .map(spark.read.schema(s"$idCol long").parquet(_))
+
+  /** `df` without the ids tombstoned in `dir`. */
+  def liveOnly(df: DataFrame, dir: String, idCol: String): DataFrame =
+    tombstones(df.sparkSession, dir, idCol).fold(df)(df.join(_, Seq(idCol), "left_anti"))
+
+  /** The re-insert guard of an append: no `idCol` of `df` may be
+    * tombstoned in `dir` until `compact` has run, or its stale row would
+    * resurface or shadow the new one. */
+  def requireNotTombstoned(df: DataFrame, idCol: String, dir: String, verb: String,
+                           compact: String): Unit =
+    tombstones(df.sparkSession, dir, idCol).foreach(t => Validation.require(
+      df.select(col(idCol).cast("long")).join(t, Seq(idCol), "left_semi"), Validation.noRows(
+        s"$verb: incoming shard re-inserts tombstoned $idCol(s); run $compact('$dir') first", idCol)))
 
   /** Recursively delete `path` on its filesystem (no-op when absent). */
   def deleteRecursive(spark: SparkSession, path: String): Unit = {

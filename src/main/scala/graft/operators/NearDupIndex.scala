@@ -129,14 +129,8 @@ object NearDupIndex {
         s"${bandsTbl(dir)} has no catalog bucket spec — refusing to " +
         "append/compact with an assumed bucket count"))
 
-  private def live(spark: SparkSession, dir: String, tbl: String): DataFrame = {
-    val tombPath = s"$dir/tombstones"
-    val t0 = spark.table(tbl)
-    if (IndexFs.exists(spark, tombPath))
-      t0.join(spark.read.schema("doc_id long").parquet(tombPath),
-        Seq("doc_id"), "left_anti")
-    else t0
-  }
+  private def live(spark: SparkSession, dir: String, tbl: String): DataFrame =
+    IndexFs.liveOnly(spark.table(tbl), dir, "doc_id")
 
   /** Per-doc index rows for a document set under a GIVEN stop set:
     * `(doc_id, fset, n_fp, bvs)` — one map-side-combined aggregate over
@@ -353,22 +347,14 @@ object NearDupIndex {
     val spark = newDocs.sparkSession
     requireConf(spark, dir)
     refreshStored(spark, dir)
-    val tombPath = s"$dir/tombstones"
-    if (IndexFs.exists(spark, tombPath)) {
-      val clash = newDocs.select(col("doc_id").cast("long"))
-        .join(spark.read.schema("doc_id long").parquet(tombPath),
-          Seq("doc_id"), "left_semi")
-        .limit(1).count()
-      require(clash == 0L, "appendNearDupIndex: incoming shard re-inserts " +
-        s"tombstoned doc_id(s); run compactNearDupIndex('$dir') first")
-    }
-    val liveClash = newDocs.select(col("doc_id").cast("long"))
+    IndexFs.requireNotTombstoned(newDocs, "doc_id", dir, "appendNearDupIndex", "compactNearDupIndex")
+    Validation.require(newDocs.select(col("doc_id").cast("long"))
       .join(spark.table(setsTbl(dir)).select(col("doc_id").cast("long")),
-        Seq("doc_id"), "left_semi")
-      .limit(1).count()
-    require(liveClash == 0L, "appendNearDupIndex: incoming shard re-inserts " +
-      s"doc_id(s) already live in '$dir' — appends must be id-disjoint " +
-      "(delete + compact first for update-shaped re-inserts)")
+        Seq("doc_id"), "left_semi"),
+      Validation.noRows("appendNearDupIndex: incoming shard re-inserts " +
+        s"doc_id(s) already live in '$dir' — appends must be id-disjoint " +
+        "(delete + compact first for update-shaped re-inserts)",
+        "doc_id"))
     // ONE shard winnow feeds the index rows AND the drift metric
     val fps = TextOps.winnow(newDocs).select("doc_id", "fp").distinct()
       .localCheckpoint()
@@ -453,16 +439,13 @@ object NearDupIndex {
     val tombPath = s"$dir/tombstones"
     val incoming = deletedIds.select(col("doc_id").cast("long"))
       .dropDuplicates("doc_id")
-    val eff = (if (IndexFs.exists(spark, tombPath))
-      incoming.join(spark.read.schema("doc_id long").parquet(tombPath),
-        Seq("doc_id"), "left_anti")
-    else incoming).localCheckpoint()
-    val foreign = eff
+    val eff = IndexFs.liveOnly(incoming, dir, "doc_id").localCheckpoint()
+    Validation.require(eff
       .join(spark.table(setsTbl(dir)).select(col("doc_id").cast("long")),
-        Seq("doc_id"), "left_anti")
-      .limit(1).count()
-    require(foreign == 0L, "deleteFromNearDupIndex: delete feed contains " +
-      s"doc_id(s) never indexed in '$dir' — fix the feed")
+        Seq("doc_id"), "left_anti"),
+      Validation.noRows("deleteFromNearDupIndex: delete feed contains " +
+        s"doc_id(s) never indexed in '$dir' — fix the feed",
+        "doc_id"))
     eff.write.mode("append").parquet(tombPath)
   }
 

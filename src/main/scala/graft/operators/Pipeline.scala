@@ -60,8 +60,9 @@ object Pipeline {
   /** Full pipeline: cells(grp, feature_id, value) → marker stats
     * (grp, gene, U, p_value, p_adjusted, logfoldchange, abs_logfoldchange, rk).
     * `cells` values are assumed log1p-transformed for the lfc leg, as in
-    * the reference (conftest.py:11). */
+    * the reference (conftest.py:11). A `topN` below 1 throws, with no job. */
   def markerStats(spark: SparkSession, cells: DataFrame, cfg: Config = Config()): DataFrame = {
+    Validation.requireTopNPositive(cfg.topN)
     val ranked = rankedCells(spark, cells, cfg)
     val stats = MwuStats.withBH(
       MwuStats.withP(

@@ -669,15 +669,7 @@ object Pq {
     // appends cleanly — so a re-insert must compact first, and this
     // shard-sized gate makes the constraint loud instead of letting the
     // rebuild invariant silently break (advice r8).
-    val tombPath = s"$dir/tombstones"
-    if (IndexFs.exists(spark, tombPath)) {
-      val clash = nn.select(col("vec_id").cast("long"))
-        .join(spark.read.schema("vec_id long").parquet(tombPath),
-          Seq("vec_id"), "left_semi")
-        .limit(1).count()
-      require(clash == 0L, "appendIvfPqIndex: incoming shard re-inserts " +
-        s"tombstoned vec_id(s); run compactIvfPqIndex('$dir') first")
-    }
+    IndexFs.requireNotTombstoned(nn, "vec_id", dir, "appendIvfPqIndex", "compactIvfPqIndex")
     // the shard encodes through the codebook STORED WITH THE INDEX —
     // an append may run sessions/days after the build, and encoding
     // with anything but the build's quantizer silently corrupts ADC
@@ -735,10 +727,7 @@ object Pq {
     val tombPath = s"$dir/tombstones"
     val incoming = deleted.filter(size(col("embedding")) === dim)
       .dropDuplicates("vec_id")
-    val embF = (if (IndexFs.exists(spark, tombPath))
-      incoming.join(spark.read.schema("vec_id long").parquet(tombPath),
-        Seq("vec_id"), "left_anti")
-    else incoming).localCheckpoint()
+    val embF = IndexFs.liveOnly(incoming, dir, "vec_id").localCheckpoint()
     embF.select(col("vec_id").cast("long"))
       .write.mode("append").parquet(tombPath)
     val merged = spark.read.schema(storedStatsSchema).parquet(s"$dir/cellstats")
@@ -767,10 +756,7 @@ object Pq {
   def compactIvfPqIndex(spark: SparkSession, dir: String): Unit = {
     val tombPath = s"$dir/tombstones"
     val codes = spark.read.schema(storedCodesSchema).parquet(s"$dir/codes")
-    val live = if (IndexFs.exists(spark, tombPath))
-      codes.join(spark.read.schema("vec_id long").parquet(tombPath),
-        Seq("vec_id"), "left_anti")
-    else codes
+    val live = IndexFs.liveOnly(codes, dir, "vec_id")
     // one task per cell → one file per cell; sorted for scan locality.
     // localCheckpoint materializes before the overwrite of the path
     // being read (Spark cannot lazily read what it is replacing).
@@ -814,12 +800,7 @@ object Pq {
     // tombstone-aware serve ([[deleteFromIvfPqIndex]]): deleted ids stop
     // answering without any code-file rewrite; the sidecar is deleted-
     // rows-sized and broadcasts until a compaction clears it
-    val tombPath = s"$indexDir/tombstones"
-    val codesLive = if (IndexFs.exists(spark, tombPath))
-      codesStored.join(
-        spark.read.schema("vec_id long").parquet(tombPath),
-        Seq("vec_id"), "left_anti")
-    else codesStored
+    val codesLive = IndexFs.liveOnly(codesStored, indexDir, "vec_id")
     val pairs = probes.join(codesLive, Seq("cl"))
       .filter(col("q_id") =!= col("vec_id"))
       // ADC LUT from the codebook stored WITH the index — fixed-grid

@@ -110,14 +110,8 @@ object SparseIndex {
 
   /** The stored posting rows with tombstoned documents anti-joined out —
     * the live half every serve and every exact backfill derives from. */
-  private def livePostings(spark: SparkSession, dir: String): DataFrame = {
-    val tombPath = s"$dir/tombstones"
-    val tf0 = spark.table(postingsTbl(dir))
-    if (IndexFs.exists(spark, tombPath))
-      tf0.join(spark.read.schema("doc_id long").parquet(tombPath),
-        Seq("doc_id"), "left_anti")
-    else tf0
-  }
+  private def livePostings(spark: SparkSession, dir: String): DataFrame =
+    IndexFs.liveOnly(spark.table(postingsTbl(dir)), dir, "doc_id")
 
   /** The df moments folded from the stored delta segments: bucket-local
     * `sum` per token (the scan's bucket hash already satisfies the
@@ -242,15 +236,7 @@ object SparseIndex {
   def appendSparseIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
     refreshStored(spark, dir)
-    val tombPath = s"$dir/tombstones"
-    if (IndexFs.exists(spark, tombPath)) {
-      val clash = newDocs.select(col("doc_id").cast("long"))
-        .join(spark.read.schema("doc_id long").parquet(tombPath),
-          Seq("doc_id"), "left_semi")
-        .limit(1).count()
-      require(clash == 0L, "appendSparseIndex: incoming shard re-inserts " +
-        s"tombstoned doc_id(s); run compactSparseIndex('$dir') first")
-    }
+    IndexFs.requireNotTombstoned(newDocs, "doc_id", dir, "appendSparseIndex", "compactSparseIndex")
     // snapshot the meta moments BEFORE the segment writes: readMeta's
     // legacy-backfill path derives `tot` from the live postings, which
     // must be the PRE-append postings (lazily it would see the new
@@ -307,17 +293,14 @@ object SparseIndex {
     refreshStored(spark, dir)
     val tombPath = s"$dir/tombstones"
     val incoming = deletedDocs.dropDuplicates("doc_id")
-    val eff = (if (IndexFs.exists(spark, tombPath))
-      incoming.join(spark.read.schema("doc_id long").parquet(tombPath),
-        Seq("doc_id"), "left_anti")
-    else incoming).localCheckpoint()
-    val foreign = eff.select(col("doc_id").cast("long"))
+    val eff = IndexFs.liveOnly(incoming, dir, "doc_id").localCheckpoint()
+    Validation.require(eff.select(col("doc_id").cast("long"))
       .join(spark.table(postingsTbl(dir)).select(col("doc_id").cast("long")),
-        Seq("doc_id"), "left_anti")
-      .limit(1).count()
-    require(foreign == 0L, "deleteFromSparseIndex: delete feed contains " +
-      s"doc_id(s) never indexed in '$dir' — subtracting their df moments " +
-      "would corrupt the sidecars; fix the feed")
+        Seq("doc_id"), "left_anti"),
+      Validation.noRows("deleteFromSparseIndex: delete feed contains " +
+        s"doc_id(s) never indexed in '$dir' — subtracting their df moments " +
+        "would corrupt the sidecars; fix the feed",
+        "doc_id"))
     // snapshot meta BEFORE the tombstone write: the legacy-backfill
     // path derives `tot` from the live postings, which must still see
     // the docs this delete is about to tombstone (lazily it would

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * rescale exactly) to keep max|x| ~ 1e2, good to n ~ 1e8 rows per
   * aggregate. At 1e12-row scale, raise the shifts (or lower the
   * fixed-point factor) accordingly — the contract is explicit, not
-  * silently violated: Validation.requireFinite guards the inputs and
-  * DuckDB's HUGEINT sum would flag a Spark wrap as a gate mismatch.
+  * silently violated: a caller with untrusted inputs runs Validation.
+  * requireFinite first, and DuckDB's HUGEINT sum flags a Spark wrap.
   *
   * Scale shape: every statistic is one map-side-combined hash aggregate
   * over the fact table (+ a broadcast of the 1-row totals for the

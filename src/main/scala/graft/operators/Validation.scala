@@ -1,76 +1,107 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Pre-flight validation predicates (SURVEY.md §2.2) — the Spark
-  * rendering of the reference's reject-rather-than-filter checks:
+/** Pre-flight validation (SURVEY.md §2.2) — the Spark rendering of the
+  * reference's reject-rather-than-filter checks:
   * `validate_ranks_and_masks` (/root/reference/dask_mwu/_utils.py:25-51),
   * `get_masks` shape rejects (rank_data.py:64-70), `create_df`
-  * `_check_shapes` (create_df.py:11-64).
+  * `_check_shapes` and `top_n` bounds (create_df.py:11-64).
   *
-  * Each check is a distributed assertion query (no full collect — at most
-  * one offending row crosses to the driver for the error message).
+  * Every eager check is a set of [[Rule]]s that [[require]] runs as one
+  * aggregate over its input: one action per input however many rules it
+  * checks, and only the aggregate's row crosses to the driver.
   */
 object Validation {
 
   final case class ValidationException(msg: String) extends IllegalArgumentException(msg)
 
-  private def firstBad(bad: DataFrame, msg: String): Unit =
-    bad.limit(1).collect().headOption.foreach { r =>
-      throw ValidationException(s"$msg (e.g. $r)")
+  /** `example` is an aggregate that is NULL when the rule holds and
+    * otherwise names an offending example. */
+  final case class Rule(message: String, example: Column)
+
+  /** One `agg(...).head()` over `df`; throws
+    * `ValidationException("<message> (e.g. <example>)")` for the first
+    * rule that fails. */
+  def require(df: DataFrame, rules: Rule*): Unit = if (rules.nonEmpty) {
+    val row = df.agg(rules.head.example, rules.tail.map(_.example): _*).head()
+    rules.indices.find(!row.isNullAt(_)).foreach { i =>
+      throw ValidationException(s"${rules(i).message} (e.g. ${row.get(i)})")
     }
-
-  /** Partition-of-groups check: every observation in EXACTLY one group
-    * (reference _utils.py:47-51: >=1 and <=1). For an obs dimension
-    * table keyed by obs_id. */
-  def requirePartition(obs: DataFrame, idCol: String = "obs_id",
-                       groupCol: String = "grp"): Unit = {
-    firstBad(obs.filter(col(groupCol).isNull),
-      "every observation must belong to a group")
-    firstBad(obs.groupBy(idCol).agg(count(lit(1)).as("n_groups"))
-      .filter(col("n_groups") =!= 1),
-      "observations must belong to exactly one group")
   }
 
-  /** Matrix-shape consistency: every feature must cover the same
-    * observation count (the reference validates ranks.shape == masks rows,
-    * _utils.py:38-45; in long form: uniform per-feature cardinality). */
-  def requireUniformFeatures(cells: DataFrame, featureCol: String = "feature_id"): Unit = {
-    val counts = cells.groupBy(featureCol).agg(count(lit(1)).as("n_obs"))
-    firstBad(
-      counts.select(countDistinct("n_obs").as("d")).filter(col("d") > 1),
-      "all features must have the same number of observations")
+  /** `c=value` of one row where `bad` holds (a NULL `c` reads `c=null`). */
+  private def offending(c: String, bad: Column = lit(true)): Column =
+    min(when(bad, format_string(s"$c=%s", col(c))))
+
+  /** The rule of an index guard's semi- or anti-join, whose every row
+    * offends: it holds when the join is empty and names one row's `c`. */
+  def noRows(message: String, c: String): Rule = Rule(message, offending(c))
+
+  /** Partition-of-groups check over `obs(obs_id, grp)`: every observation
+    * in EXACTLY one group (reference _utils.py:47-51). Per-id frames, like
+    * [[featureCounts]], are read back in one partition: the final per-key
+    * aggregate and the rules then share one stage, two jobs, not three. */
+  def requirePartition(obs: DataFrame): Unit =
+    require(obs.groupBy("obs_id").agg(count(lit(1)).as("n"), count("grp").as("n_grp")).coalesce(1),
+      Rule("every observation must belong to a group", offending("obs_id", col("n_grp") < col("n"))),
+      Rule("observations must belong to exactly one group", offending("obs_id", col("n") > 1)))
+
+  /** One row per feature of `cells(feature_id, …)` with its observation
+    * count: the frame of [[uniformFeatures]] and [[topNWithin]]. */
+  def featureCounts(cells: DataFrame): DataFrame =
+    cells.groupBy("feature_id").agg(count(lit(1)).as("n_obs")).coalesce(1)
+
+  /** Every feature covers the same observation count (the reference's
+    * ranks.shape == masks rows, _utils.py:38-45, in long form). */
+  val uniformFeatures: Rule = Rule("all features must have the same number of observations",
+    when(min("n_obs") =!= max("n_obs"), format_string("feature_id=%s has %d, feature_id=%s has %d",
+      min_by(col("feature_id"), col("n_obs")), min("n_obs"),
+      max_by(col("feature_id"), col("n_obs")), max("n_obs"))))
+
+  def requireUniformFeatures(cells: DataFrame): Unit = require(featureCounts(cells), uniformFeatures)
+
+  /** One row per distinct feature of `cells`, `__named` when `vars` names
+    * it: the frame of [[varsCover]] and [[topNWithin]]. */
+  def varsCoverage(cells: DataFrame, vars: DataFrame): DataFrame =
+    cells.select("feature_id").distinct().join(
+      vars.select("feature_id").distinct().withColumn("__named", lit(true)), Seq("feature_id"), "left")
+
+  /** The gene-name table names every feature present (reference
+    * scratch/rank_gene_groups.py:118-133). */
+  val varsCover: Rule = Rule("vars table must name every feature",
+    offending("feature_id", col("__named").isNull))
+
+  def requireVarsCover(cells: DataFrame, vars: DataFrame): Unit =
+    require(varsCoverage(cells, vars), varsCover)
+
+  private def topNMessage(k: Int, n: Any) =
+    s"top_n must be in [1, $n], got $k (reference create_df.py:60-64)"
+
+  /** top_n ≥ 1, at call time with no job; k ≤ n_features is [[topNWithin]]. */
+  def requireTopNPositive(topN: Option[Int]): Unit =
+    topN.filter(_ < 1).foreach(k => throw ValidationException(topNMessage(k, "n_features")))
+
+  /** top_n ≤ n_features over a frame with one row per feature, so the
+    * bound rides an aggregate that already counts the features. */
+  def topNWithin(topN: Option[Int]): Seq[Rule] = topN.toSeq.map { k =>
+    Rule(topNMessage(k, "n_features"), when(count(lit(1)) < k, format_string("%d features", count(lit(1)))))
   }
 
-  /** vars/matrix length consistency (reference
-    * scratch/rank_gene_groups.py:118-133): the gene-name table must cover
-    * exactly the features present. */
-  def requireVarsCover(cells: DataFrame, vars: DataFrame,
-                       featureCol: String = "feature_id"): Unit = {
-    firstBad(cells.select(featureCol).distinct()
-      .join(vars, Seq(featureCol), "left_anti"),
-      "vars table must name every feature")
-  }
-
-  /** create_df top_n bounds check (create_df.py:60-64,109-115). */
+  /** top_n bounds against a known feature count. */
   def requireTopN(topN: Option[Int], nFeatures: Long): Unit =
-    topN.foreach { k =>
-      if (k < 1 || k > nFeatures)
-        throw ValidationException(
-          s"top_n must be in [1, $nFeatures], got $k (reference create_df.py:60-64)")
-    }
+    topN.filter(k => k < 1 || k > nFeatures).foreach(k => throw ValidationException(topNMessage(k, nFeatures)))
 
-  /** Pre-flight finiteness check for fixed-point-summed measures: NaN/Inf
-    * inputs would not fail loudly — Spark's non-ANSI double→BIGINT cast
-    * wraps them to 0/Long.Max while DuckDB throws — so the deterministic-
-    * aggregation contract ([[graft.oracle.Parity.fpSum]]) only holds for
-    * finite values. Reject up front, like the reference's shape checks. */
+  /** Finiteness of fixed-point-summed measures, all columns in one pass:
+    * NaN/Inf would not fail loudly — Spark's non-ANSI double→BIGINT cast
+    * wraps them to 0/Long.Max while DuckDB throws — so the
+    * deterministic-aggregation contract ([[graft.oracle.Parity.fpSum]])
+    * holds only for finite values. No operator calls it: a caller with
+    * untrusted measures calls it before the query. */
   def requireFinite(df: DataFrame, cols: Seq[String]): Unit =
-    cols.foreach { c =>
-      firstBad(
-        df.filter(isnan(col(c)) || col(c) === Double.PositiveInfinity ||
-          col(c) === Double.NegativeInfinity),
-        s"measure column '$c' must be finite (NaN/Inf would diverge between engines)")
-    }
+    require(df, cols.map { c =>
+      Rule(s"measure column '$c' must be finite (NaN/Inf would diverge between engines)",
+        offending(c, isnan(col(c)) || col(c) === Double.PositiveInfinity || col(c) === Double.NegativeInfinity))
+    }: _*)
 }
