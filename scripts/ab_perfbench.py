@@ -2,15 +2,15 @@
 """Two-sided A/B of the perfbench benchmark, in interleaved pairs.
 
     python3 scripts/ab_perfbench.py BASE CHANGE --seeds 301-310 \\
-        [--workloads tall_continuous,wide_sparse] [--seconds 12] [--trace 0] \\
         [--work DIR] [--out ab.json]
     python3 scripts/ab_perfbench.py --report ab.json
 
 Run from the root of a checkout. BASE and CHANGE are each a git ref of this
 repository (unpacked with `git archive` under --work) or a directory holding
 a checkout (so the working tree can be one side, as `.`). Each side is built
-once (perfbench/build.py), then for every seed and workload the two sides run
-`perfbench/run.py` back to back, one pair at a time; which side runs first
+once (perfbench/build.py), then for every seed and every workload of
+BENCHMARK.json the two sides run `perfbench/run.py --trace 0` for the file's
+`run_seconds`, back to back, one pair at a time; which side runs first
 alternates from pair to pair, so a drift in host speed falls on both.
 
 For each workload and metric the report prints each side's median and
@@ -57,11 +57,10 @@ def checkout(spec, work):
     return dest
 
 
-def run_once(root, workload, seed, seconds, trace):
+def run_once(root, workload, seed, seconds):
     """One perfbench run; its result line, or an error record."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds),
-                        "--trace", str(trace)],
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -69,11 +68,12 @@ def run_once(root, workload, seed, seconds, trace):
     return json.loads(lines[-1])
 
 
+def benchmark():
+    return json.loads((ROOT / "BENCHMARK.json").read_text())
+
+
 def directions():
-    try:
-        spec = json.loads((ROOT / "BENCHMARK.json").read_text())
-    except OSError:
-        return {}
+    spec = benchmark()
     return {m["name"]: m["better"]
             for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
 
@@ -122,9 +122,6 @@ def main(argv=None):
     ap.add_argument("base", nargs="?")
     ap.add_argument("change", nargs="?")
     ap.add_argument("--seeds", default="1-10")
-    ap.add_argument("--workloads", default="tall_continuous,wide_sparse")
-    ap.add_argument("--seconds", type=float, default=12)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--work", default=".ab_work")
     ap.add_argument("--out", default="ab_perfbench.json")
     ap.add_argument("--report", metavar="JSON", help="print the report of an earlier run")
@@ -135,6 +132,9 @@ def main(argv=None):
     if not (args.base and args.change):
         ap.error("BASE and CHANGE are required")
 
+    spec = benchmark()
+    seconds = spec["run_seconds"]
+    workloads = [w["name"] for w in spec["workloads"]]
     work = Path(args.work).resolve()
     sides = {"base": checkout(args.base, work), "change": checkout(args.change, work)}
     for root in sides.values():
@@ -143,11 +143,11 @@ def main(argv=None):
     runs = []
     pair = 0
     for i, seed in enumerate(seeds_of(args.seeds)):
-        for wl in args.workloads.split(","):
+        for wl in workloads:
             # alternates per seed, so on each workload too
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             for side in order:
-                res = run_once(sides[side], wl, seed, args.seconds, args.trace)
+                res = run_once(sides[side], wl, seed, seconds)
                 runs.append({"pair": pair, "workload": wl, "seed": seed, "side": side,
                              "first": order[0], "result": res})
                 print(f"pair {pair} {wl} seed {seed} {side}: "
@@ -156,8 +156,8 @@ def main(argv=None):
                                   for k, v in list(res["metrics"].items())[:3])),
                       flush=True)
                 Path(args.out).write_text(json.dumps(
-                    {"base": args.base, "change": args.change, "seconds": args.seconds,
-                     "trace": args.trace, "runs": runs}, indent=1))
+                    {"base": args.base, "change": args.change, "seconds": seconds,
+                     "runs": runs}, indent=1))
             pair += 1
     report(runs)
 

@@ -68,9 +68,7 @@ object MwuApi {
     * [[MarkerTable.writePerGroup]]. */
   def createDf(stats: DataFrame, lfc: DataFrame, vars: DataFrame,
                topN: Option[Int] = None, ascending: Boolean = false): DataFrame = {
-    Validation.requireTopNPositive(topN)
-    Validation.require(Validation.varsCoverage(stats, vars),
-      Validation.varsCover +: Validation.topNWithin(topN): _*)
+    Validation.requireVarsCover(stats, vars, topN)
     val joined = stats.join(lfc, Seq("feature_id", "grp"))
       .join(broadcast(vars), Seq("feature_id"))
       .withColumn("abs_logfoldchange", abs(col("logfoldchange")))
@@ -88,16 +86,17 @@ object MwuApi {
 
   /** Canonical split-relation input (FIXTURES.md §1): fact
     * `cells(obs_id, feature_id, value)` + dimension `obs(obs_id, grp)`.
-    * Validates the partition-of-groups invariant (reference
-    * _utils.py:47-51), the uniform feature shape and `topN`, joins the
-    * labels onto the fact (the planner picks a broadcast while obs fits,
-    * else a shuffle join on obs_id), and runs the pipeline. */
+    * Validates the uniform feature shape with `topN` and the
+    * partition-of-groups invariant (reference _utils.py:38-51), joins the
+    * labels onto the fact and runs the pipeline. The planner broadcasts
+    * obs only while its size estimate is under
+    * `spark.sql.autoBroadcastJoinThreshold` (10 MB by default, a few
+    * hundred thousand obs rows); above that the join shuffles all of
+    * `cells` on obs_id, unless the threshold is raised to cover obs. */
   def rankGeneGroupsFromObs(spark: SparkSession, cells: DataFrame, obs: DataFrame,
                             cfg: Pipeline.Config = Pipeline.Config()): DataFrame = {
-    Validation.requireTopNPositive(cfg.topN)
+    Validation.requireUniformFeatures(cells, cfg.topN)
     Validation.requirePartition(obs)
-    Validation.require(Validation.featureCounts(cells),
-      Validation.uniformFeatures +: Validation.topNWithin(cfg.topN): _*)
     val joined = cells.join(obs, "obs_id")
       .select(col("grp"), col("feature_id"), col("value"))
     Pipeline.markerStats(spark, joined, cfg)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Pre-flight validation (SURVEY.md §2.2) — the Spark rendering of the
@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * `get_masks` shape rejects (rank_data.py:64-70), `create_df`
   * `_check_shapes` and `top_n` bounds (create_df.py:11-64).
   *
-  * Every eager check is a set of [[Rule]]s that [[require]] runs as one
-  * aggregate over its input: one action per input however many rules it
-  * checks, and only the aggregate's row crosses to the driver.
+  * Every eager check is a set of [[Rule]]s that [[require]] evaluates in
+  * one pass over its input: one action per input however many rules it
+  * checks, and only the rules' values cross to the driver.
   */
 object Validation {
 
@@ -19,15 +19,22 @@ object Validation {
 
   /** `example` is an aggregate that is NULL when the rule holds and
     * otherwise names an offending example. */
-  final case class Rule(message: String, example: Column)
+  private[operators] final case class Rule(message: String, example: Column)
 
-  /** One `agg(...).head()` over `df`; throws
+  /** Evaluates every rule over `df` in one pass and throws
     * `ValidationException("<message> (e.g. <example>)")` for the first
-    * rule that fails. */
-  def require(df: DataFrame, rules: Rule*): Unit = if (rules.nonEmpty) {
-    val row = df.agg(rules.head.example, rules.tail.map(_.example): _*).head()
-    rules.indices.find(!row.isNullAt(_)).foreach { i =>
-      throw ValidationException(s"${rules(i).message} (e.g. ${row.get(i)})")
+    * rule that fails. The rules are observed metrics of a no-op write, so
+    * they are merged on the driver from every task's partial result: over
+    * a grouped `df` the per-key merge keeps all its shuffle partitions and
+    * no exchange into one partition follows it (one job per shuffle plus
+    * one, where `agg(...).head()` takes one more). */
+  private[operators] def require(df: DataFrame, rules: Rule*): Unit = if (rules.nonEmpty) {
+    val seen = new Observation()
+    val named = rules.indices.map(i => rules(i).example.as(s"rule$i"))
+    df.observe(seen, named.head, named.tail: _*).write.format("noop").mode("overwrite").save()
+    val values = seen.get
+    rules.indices.find(i => values(s"rule$i") != null).foreach { i =>
+      throw ValidationException(s"${rules(i).message} (e.g. ${values(s"rule$i")})")
     }
   }
 
@@ -37,61 +44,58 @@ object Validation {
 
   /** The rule of an index guard's semi- or anti-join, whose every row
     * offends: it holds when the join is empty and names one row's `c`. */
-  def noRows(message: String, c: String): Rule = Rule(message, offending(c))
+  private[operators] def noRows(message: String, c: String): Rule = Rule(message, offending(c))
 
   /** Partition-of-groups check over `obs(obs_id, grp)`: every observation
-    * in EXACTLY one group (reference _utils.py:47-51). Per-id frames, like
-    * [[featureCounts]], are read back in one partition: the final per-key
-    * aggregate and the rules then share one stage, two jobs, not three. */
+    * in EXACTLY one group (reference _utils.py:47-51), both rules over one
+    * per-id aggregate. */
   def requirePartition(obs: DataFrame): Unit =
-    require(obs.groupBy("obs_id").agg(count(lit(1)).as("n"), count("grp").as("n_grp")).coalesce(1),
+    require(obs.groupBy("obs_id").agg(count(lit(1)).as("n"), count("grp").as("n_grp")),
       Rule("every observation must belong to a group", offending("obs_id", col("n_grp") < col("n"))),
       Rule("observations must belong to exactly one group", offending("obs_id", col("n") > 1)))
 
-  /** One row per feature of `cells(feature_id, …)` with its observation
-    * count: the frame of [[uniformFeatures]] and [[topNWithin]]. */
-  def featureCounts(cells: DataFrame): DataFrame =
-    cells.groupBy("feature_id").agg(count(lit(1)).as("n_obs")).coalesce(1)
-
-  /** Every feature covers the same observation count (the reference's
-    * ranks.shape == masks rows, _utils.py:38-45, in long form). */
-  val uniformFeatures: Rule = Rule("all features must have the same number of observations",
-    when(min("n_obs") =!= max("n_obs"), format_string("feature_id=%s has %d, feature_id=%s has %d",
-      min_by(col("feature_id"), col("n_obs")), min("n_obs"),
-      max_by(col("feature_id"), col("n_obs")), max("n_obs"))))
-
-  def requireUniformFeatures(cells: DataFrame): Unit = require(featureCounts(cells), uniformFeatures)
-
-  /** One row per distinct feature of `cells`, `__named` when `vars` names
-    * it: the frame of [[varsCover]] and [[topNWithin]]. */
-  def varsCoverage(cells: DataFrame, vars: DataFrame): DataFrame =
-    cells.select("feature_id").distinct().join(
-      vars.select("feature_id").distinct().withColumn("__named", lit(true)), Seq("feature_id"), "left")
+  /** Every feature of `cells(feature_id, …)` covers the same observation
+    * count (the reference's ranks.shape == masks rows, _utils.py:38-45, in
+    * long form), and `topN` is within [1, n_features], over one
+    * per-feature aggregate. */
+  def requireUniformFeatures(cells: DataFrame, topN: Option[Int] = None): Unit = {
+    requireTopNPositive(topN)
+    require(cells.groupBy("feature_id").agg(count(lit(1)).as("n_obs")),
+      Rule("all features must have the same number of observations",
+        when(min("n_obs") =!= max("n_obs"), format_string("feature_id=%s has %d, feature_id=%s has %d",
+          min_by(col("feature_id"), col("n_obs")), min("n_obs"),
+          max_by(col("feature_id"), col("n_obs")), max("n_obs")))) +: topNWithin(topN): _*)
+  }
 
   /** The gene-name table names every feature present (reference
-    * scratch/rank_gene_groups.py:118-133). */
-  val varsCover: Rule = Rule("vars table must name every feature",
-    offending("feature_id", col("__named").isNull))
+    * scratch/rank_gene_groups.py:118-133), and `topN` is within
+    * [1, n_features], over one aggregate of the distinct features. */
+  def requireVarsCover(cells: DataFrame, vars: DataFrame, topN: Option[Int] = None): Unit = {
+    requireTopNPositive(topN)
+    require(cells.select("feature_id").distinct().join(
+      vars.select("feature_id").distinct().withColumn("__named", lit(true)), Seq("feature_id"), "left"),
+      Rule("vars table must name every feature", offending("feature_id", col("__named").isNull))
+        +: topNWithin(topN): _*)
+  }
 
-  def requireVarsCover(cells: DataFrame, vars: DataFrame): Unit =
-    require(varsCoverage(cells, vars), varsCover)
+  private def topNError(k: Int, n: Any) =
+    ValidationException(s"top_n must be in [1, $n], got $k (reference create_df.py:60-64)")
 
-  private def topNMessage(k: Int, n: Any) =
-    s"top_n must be in [1, $n], got $k (reference create_df.py:60-64)"
-
-  /** top_n ≥ 1, at call time with no job; k ≤ n_features is [[topNWithin]]. */
-  def requireTopNPositive(topN: Option[Int]): Unit =
-    topN.filter(_ < 1).foreach(k => throw ValidationException(topNMessage(k, "n_features")))
+  /** top_n ≥ 1, at call time with no job. */
+  private[operators] def requireTopNPositive(topN: Option[Int]): Unit =
+    topN.filter(_ < 1).foreach(k => throw topNError(k, "n_features"))
 
   /** top_n ≤ n_features over a frame with one row per feature, so the
     * bound rides an aggregate that already counts the features. */
-  def topNWithin(topN: Option[Int]): Seq[Rule] = topN.toSeq.map { k =>
-    Rule(topNMessage(k, "n_features"), when(count(lit(1)) < k, format_string("%d features", count(lit(1)))))
+  private def topNWithin(topN: Option[Int]): Seq[Rule] = topN.toSeq.map { k =>
+    Rule(topNError(k, "n_features").msg, when(count(lit(1)) < k, format_string("%d features", count(lit(1)))))
   }
 
   /** top_n bounds against a known feature count. */
-  def requireTopN(topN: Option[Int], nFeatures: Long): Unit =
-    topN.filter(k => k < 1 || k > nFeatures).foreach(k => throw ValidationException(topNMessage(k, nFeatures)))
+  def requireTopN(topN: Option[Int], nFeatures: Long): Unit = {
+    requireTopNPositive(topN)
+    topN.filter(_ > nFeatures).foreach(k => throw topNError(k, nFeatures))
+  }
 
   /** Finiteness of fixed-point-summed measures, all columns in one pass:
     * NaN/Inf would not fail loudly — Spark's non-ANSI double→BIGINT cast

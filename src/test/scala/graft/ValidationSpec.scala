@@ -5,25 +5,27 @@ import graft.operators.{NearDupIndex, Pipeline, Pq, SparseIndex, Validation}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Pre-flight checks: one aggregate per input, an error message that
   * names an offending example, and the `top_n` bounds of the reference's
   * create_df (create_df.py:60-64). */
 class ValidationSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Jobs that `body` starts, counted under its own job group. Listener
+  /** The jobs that `body` starts, under its own job group. Listener
     * events arrive asynchronously, so the bus is drained on both sides
     * (as `graft.Profile` does). */
-  private def jobsOf(body: => Unit): Int = {
+  private def jobStarts(body: => Unit): Seq[SparkListenerJobStart] = {
     val sc = spark.sparkContext
     val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
     val waitUntilEmpty = bus.getClass.getMethod("waitUntilEmpty")
     val group = "validation-spec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+          jobs.add(js)
     }
     waitUntilEmpty.invoke(bus)
     sc.addSparkListener(listener)
@@ -34,8 +36,10 @@ class ValidationSpec extends SparkSpec {
       waitUntilEmpty.invoke(bus)
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    jobs.asScala.toSeq
   }
+
+  private def jobsOf(body: => Unit): Int = jobStarts(body).size
 
   private def message(body: => Unit): String =
     intercept[Validation.ValidationException](body).getMessage
@@ -50,6 +54,20 @@ class ValidationSpec extends SparkSpec {
       Validation.requireUniformFeatures(cells)
     }
     assert(n > 0 && n <= 4, s"pre-flight checks ran $n jobs")
+  }
+
+  test("the per-key merge of a grouped check keeps every shuffle partition") {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val jobs = try jobStarts {
+      Validation.requirePartition(obs)
+      Validation.requireUniformFeatures(cells)
+    } finally spark.conf.set(key, prev)
+    // the last stage of each job that reads a shuffle: 4 tasks, as many as
+    // spark.sql.shuffle.partitions, not one task merging every key
+    val merges = jobs.map(_.stageInfos.maxBy(_.stageId)).filter(_.parentIds.nonEmpty)
+    assert(merges.size == 2 && merges.forall(_.numTasks == 4), merges.map(_.numTasks))
   }
 
   test("partition rules: the first failing rule throws, naming an obs_id") {
