@@ -44,9 +44,9 @@ object IndexFs {
     * resurface or shadow the new one. */
   def requireNotTombstoned(df: DataFrame, idCol: String, dir: String, verb: String,
                            compact: String): Unit =
-    tombstones(df.sparkSession, dir, idCol).foreach(t => Validation.require(
-      df.select(col(idCol).cast("long")).join(t, Seq(idCol), "left_semi"), Validation.noRows(
-        s"$verb: incoming shard re-inserts tombstoned $idCol(s); run $compact('$dir') first", idCol)))
+    tombstones(df.sparkSession, dir, idCol).foreach(t => Validation.requireEmpty(
+      df.select(col(idCol).cast("long")).join(t, Seq(idCol), "left_semi"),
+      s"$verb: incoming shard re-inserts tombstoned $idCol(s); run $compact('$dir') first", idCol))
 
   /** Recursively delete `path` on its filesystem (no-op when absent). */
   def deleteRecursive(spark: SparkSession, path: String): Unit = {

@@ -348,13 +348,12 @@ object NearDupIndex {
     requireConf(spark, dir)
     refreshStored(spark, dir)
     IndexFs.requireNotTombstoned(newDocs, "doc_id", dir, "appendNearDupIndex", "compactNearDupIndex")
-    Validation.require(newDocs.select(col("doc_id").cast("long"))
+    Validation.requireEmpty(newDocs.select(col("doc_id").cast("long"))
       .join(spark.table(setsTbl(dir)).select(col("doc_id").cast("long")),
         Seq("doc_id"), "left_semi"),
-      Validation.noRows("appendNearDupIndex: incoming shard re-inserts " +
+      "appendNearDupIndex: incoming shard re-inserts " +
         s"doc_id(s) already live in '$dir' — appends must be id-disjoint " +
-        "(delete + compact first for update-shaped re-inserts)",
-        "doc_id"))
+        "(delete + compact first for update-shaped re-inserts)", "doc_id")
     // ONE shard winnow feeds the index rows AND the drift metric
     val fps = TextOps.winnow(newDocs).select("doc_id", "fp").distinct()
       .localCheckpoint()
@@ -440,12 +439,11 @@ object NearDupIndex {
     val incoming = deletedIds.select(col("doc_id").cast("long"))
       .dropDuplicates("doc_id")
     val eff = IndexFs.liveOnly(incoming, dir, "doc_id").localCheckpoint()
-    Validation.require(eff
+    Validation.requireEmpty(eff
       .join(spark.table(setsTbl(dir)).select(col("doc_id").cast("long")),
         Seq("doc_id"), "left_anti"),
-      Validation.noRows("deleteFromNearDupIndex: delete feed contains " +
-        s"doc_id(s) never indexed in '$dir' — fix the feed",
-        "doc_id"))
+      "deleteFromNearDupIndex: delete feed contains " +
+        s"doc_id(s) never indexed in '$dir' — fix the feed", "doc_id")
     eff.write.mode("append").parquet(tombPath)
   }
 

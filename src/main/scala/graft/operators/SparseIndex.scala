@@ -294,13 +294,12 @@ object SparseIndex {
     val tombPath = s"$dir/tombstones"
     val incoming = deletedDocs.dropDuplicates("doc_id")
     val eff = IndexFs.liveOnly(incoming, dir, "doc_id").localCheckpoint()
-    Validation.require(eff.select(col("doc_id").cast("long"))
+    Validation.requireEmpty(eff.select(col("doc_id").cast("long"))
       .join(spark.table(postingsTbl(dir)).select(col("doc_id").cast("long")),
         Seq("doc_id"), "left_anti"),
-      Validation.noRows("deleteFromSparseIndex: delete feed contains " +
+      "deleteFromSparseIndex: delete feed contains " +
         s"doc_id(s) never indexed in '$dir' — subtracting their df moments " +
-        "would corrupt the sidecars; fix the feed",
-        "doc_id"))
+        "would corrupt the sidecars; fix the feed", "doc_id")
     // snapshot meta BEFORE the tombstone write: the legacy-backfill
     // path derives `tot` from the live postings, which must still see
     // the docs this delete is about to tombstone (lazily it would

@@ -19,7 +19,7 @@ object Validation {
 
   /** `example` is an aggregate that is NULL when the rule holds and
     * otherwise names an offending example. */
-  private[operators] final case class Rule(message: String, example: Column)
+  private final case class Rule(message: String, example: Column)
 
   /** Evaluates every rule over `df` in one pass and throws
     * `ValidationException("<message> (e.g. <example>)")` for the first
@@ -28,7 +28,7 @@ object Validation {
     * a grouped `df` the per-key merge keeps all its shuffle partitions and
     * no exchange into one partition follows it (one job per shuffle plus
     * one, where `agg(...).head()` takes one more). */
-  private[operators] def require(df: DataFrame, rules: Rule*): Unit = if (rules.nonEmpty) {
+  private def require(df: DataFrame, rules: Rule*): Unit = if (rules.nonEmpty) {
     val seen = new Observation()
     val named = rules.indices.map(i => rules(i).example.as(s"rule$i"))
     df.observe(seen, named.head, named.tail: _*).write.format("noop").mode("overwrite").save()
@@ -42,9 +42,10 @@ object Validation {
   private def offending(c: String, bad: Column = lit(true)): Column =
     min(when(bad, format_string(s"$c=%s", col(c))))
 
-  /** The rule of an index guard's semi- or anti-join, whose every row
-    * offends: it holds when the join is empty and names one row's `c`. */
-  private[operators] def noRows(message: String, c: String): Rule = Rule(message, offending(c))
+  /** An index guard over a semi- or anti-join whose every row offends:
+    * it holds when `df` is empty, else the message names one row's `c`. */
+  private[operators] def requireEmpty(df: DataFrame, message: String, c: String): Unit =
+    require(df, Rule(message, offending(c)))
 
   /** Partition-of-groups check over `obs(obs_id, grp)`: every observation
     * in EXACTLY one group (reference _utils.py:47-51), both rules over one
@@ -58,25 +59,21 @@ object Validation {
     * count (the reference's ranks.shape == masks rows, _utils.py:38-45, in
     * long form), and `topN` is within [1, n_features], over one
     * per-feature aggregate. */
-  def requireUniformFeatures(cells: DataFrame, topN: Option[Int] = None): Unit = {
-    requireTopNPositive(topN)
+  def requireUniformFeatures(cells: DataFrame, topN: Option[Int] = None): Unit =
     require(cells.groupBy("feature_id").agg(count(lit(1)).as("n_obs")),
       Rule("all features must have the same number of observations",
         when(min("n_obs") =!= max("n_obs"), format_string("feature_id=%s has %d, feature_id=%s has %d",
           min_by(col("feature_id"), col("n_obs")), min("n_obs"),
-          max_by(col("feature_id"), col("n_obs")), max("n_obs")))) +: topNWithin(topN): _*)
-  }
+          max_by(col("feature_id"), col("n_obs")), max("n_obs")))) +: topNRules(topN): _*)
 
   /** The gene-name table names every feature present (reference
     * scratch/rank_gene_groups.py:118-133), and `topN` is within
     * [1, n_features], over one aggregate of the distinct features. */
-  def requireVarsCover(cells: DataFrame, vars: DataFrame, topN: Option[Int] = None): Unit = {
-    requireTopNPositive(topN)
+  def requireVarsCover(cells: DataFrame, vars: DataFrame, topN: Option[Int] = None): Unit =
     require(cells.select("feature_id").distinct().join(
       vars.select("feature_id").distinct().withColumn("__named", lit(true)), Seq("feature_id"), "left"),
       Rule("vars table must name every feature", offending("feature_id", col("__named").isNull))
-        +: topNWithin(topN): _*)
-  }
+        +: topNRules(topN): _*)
 
   private def topNError(k: Int, n: Any) =
     ValidationException(s"top_n must be in [1, $n], got $k (reference create_df.py:60-64)")
@@ -85,10 +82,13 @@ object Validation {
   private[operators] def requireTopNPositive(topN: Option[Int]): Unit =
     topN.filter(_ < 1).foreach(k => throw topNError(k, "n_features"))
 
-  /** top_n ≤ n_features over a frame with one row per feature, so the
-    * bound rides an aggregate that already counts the features. */
-  private def topNWithin(topN: Option[Int]): Seq[Rule] = topN.toSeq.map { k =>
-    Rule(topNError(k, "n_features").msg, when(count(lit(1)) < k, format_string("%d features", count(lit(1)))))
+  /** top_n in [1, n_features] over a frame with one row per feature:
+    * below 1 throws at once, with no job; above n_features is a rule on
+    * the aggregate that already counts the features. */
+  private def topNRules(topN: Option[Int]): Seq[Rule] = {
+    requireTopNPositive(topN)
+    topN.toSeq.map(k => Rule(topNError(k, "n_features").msg,
+      when(count(lit(1)) < k, format_string("%d features", count(lit(1))))))
   }
 
   /** top_n bounds against a known feature count. */
